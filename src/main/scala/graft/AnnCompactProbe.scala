@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Carry-vs-compact probe for the EPOCH-CAPPED ANN substrate (E31/G29
@@ -39,13 +39,7 @@ object AnnCompactProbe {
     val es: Seq[Int] =
       if (args.length > 2) args.drop(2).toSeq.map(_.toInt)
       else Seq(1, 2, 4, 8, 16, 32, 64)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     import operators.{AnnOps, Round16Ops, Round17Ops, Round18Ops}

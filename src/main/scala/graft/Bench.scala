@@ -1,225 +1,103 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
+import graft.Harness.{Failed, Ok, Outcome, Query, Row}
 
 /** Benchmark main (driver contract): runs every SparkEntry query on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line. A warmup action runs
-  * first so JVM/session/codegen initialization isn't billed to the
-  * first query.
+  * SPARK_GRAFT_SF_DIR and prints ONE JSON line. A warmup runs first
+  * so JVM/session/codegen initialization isn't billed to the first
+  * query.
   *
-  * The printed line is kept compact (3-decimal seconds) so it survives
-  * tail-capture by the driver (round 1's full-precision line was ~3.4 KB
-  * and got truncated → "parsed": null). The same map, full precision,
-  * is written to BENCH_DETAIL.json in the working directory.
+  * The printed line is kept compact (3-decimal seconds, a headline
+  * subset) so it survives a reader that keeps only the output's tail.
+  * Every row, full precision, is written to BENCH_DETAIL.json in the
+  * working directory, each with a `status` ("ok" or "failed", the
+  * latter with its `error`). A failed row gets no time and is left out
+  * of the total, and any failed row makes the bench exit 1.
   *
   * Optional args: query names to run (subset), for fast iteration:
   *   sbt "runMain graft.Bench text_ngram_freq dedup_clusters"
   */
 object Bench {
+  /** A row's timed reps, or the failure that ended them. */
+  private type Reps = Either[Failed, Seq[Double]]
+
+  private def reps(o: Outcome): Reps = o match {
+    case Ok(sec) => Right(Seq(sec))
+    case f: Failed => Left(f)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warmup: touch every base table (parquet footer reads, scan codegen)
-    // and exercise shuffle + agg codegen once, so one-time session costs
-    // aren't billed to whichever query happens to run first
-    Seq(Tables.lineitem _, Tables.orders _, Tables.documents _,
-      Tables.events _, Tables.embeddings _)
-      .foreach(t => t(spark, sfDir).count())
-    SparkEntry.queries.get("q1_pricing_summary")
-      .foreach(fn => fn(spark, sfDir).count())
-    val selected =
-      if (args.nonEmpty) SparkEntry.queries.filter(q => args.contains(q._1))
-      else SparkEntry.queries
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
+    val selected: Seq[Query] = SparkEntry.queries.toSeq
+      .filter(q => args.isEmpty || args.contains(q._1))
+      .map { case (n, plan) => Query(n, plan) }
+    val selectedNames = selected.map(_.name).toSet
+
+    def once(row: Row): Reps = reps(Harness.run(spark, sfDir, row))
+    def more(prior: Reps, row: Row): Reps =
+      prior.flatMap(ts => once(row).map(ts ++ _))
     // Two timed runs per query, report the min (and the mean in the
     // detail file): run 1 pays one-time whole-stage-codegen/JIT compile
-    // for that query's plan shape — a per-JVM constant that would read
-    // as data cost at any SF — run 2 is the steady-state an executor
-    // actually sustains. Cache is cleared before EVERY run so no run
-    // ever reads a prior run's persisted relations.
-    // isolate queries: drop persisted relations from the previous
-    // run so timings are honest and cache pressure doesn't build
-    // across the 130+-query session. clearCache() only drops CACHED
-    // TABLES — localCheckpoint RDD blocks (the iterative CC rounds)
-    // are plain persisted RDDs and survive it, accumulating in the
-    // BlockManager across the suite and taxing later queries'
-    // memory (round-6's committed q4 read 10.4 s vs 0.87 s
-    // isolated). Drop those too, blocking, before every run.
-    def timedOnce(
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      CacheHygiene.release(spark, blocking = true)
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+    // for that query's plan shape, run 2 is the steady state. Sub-3 s
+    // rows get a THIRD rep: that class is where a single JIT/GC tail
+    // on one of two draws has repeatedly manufactured false watches;
+    // the extra rep costs < 3 s by construction. A failure ends the
+    // row's reps.
+    def timed(row: Row): Reps = {
+      val base = more(once(row), row)
+      if (base.exists(_.min < 3.0)) more(base, row) else base
     }
-    // Sub-3 s rows get a THIRD rep (round-15 judge item #2): that
-    // class is where a single JIT/GC tail on one of two draws has
-    // repeatedly manufactured false bench watches — §5's VarianceProbe
-    // case studies all found a stable floor under an unstable min-of-2.
-    // The extra rep costs < 3 s by construction; ≥3 s rows keep
-    // min-of-2 (their relative spread has never tripped a false
-    // watch, and a third multi-second rep across ~300 rows would add
-    // minutes to every bench run for no ledger value).
-    def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-              reps: Int): Seq[Double] = {
-      val base = (1 to reps).map(_ => timedOnce(fn))
-      if (base.min < 3.0) base :+ timedOnce(fn) else base
-    }
-    // Standing-index substrate builds, timed separately (round-11
-    // lifecycle split): the standing retrieval/maintenance queries are
-    // probe-only off these stores (the D13 build-once/probe-many
-    // discipline), so BENCH_DETAIL carries the one-time build cost
-    // under its own name and the query rows time what a warm index
-    // actually sustains. Each tuple is (row name, the SET of selected
-    // queries that read the store — the build runs if ANY is selected,
-    // so a subset bench never folds a cold store build into its first
-    // probe row — and the build).
-    val substrateBuilds: Seq[(String, Set[String], () => Unit)] = Seq(
-      ("bm25_standing_build", Set("bm25_standing"),
-        () => operators.RetrievalOps.bm25StandingBuild(spark, sfDir)),
-      ("phrase_standing_build", Set("phrase_standing"),
-        () => operators.Round10bOps.phraseStandingBuild(spark, sfDir)),
-      ("dedup_index_build", Set(
-        "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_bbit_minhash",
-        "dedup_clusters", "dedup_canonical", "dedup_canonical_quality",
-        "dedup_cluster_profile", "dedup_lsh_calibration",
-        "dedup_edit_verify", "dedup_graph_degree", "dedup_containment",
-        "dedup_triangles", "dedup_pagerank", "dedup_kcore",
-        "dedup_cluster_stability", "dedup_cc_incremental",
-        "dedup_cc_decremental", "graph_hits"),
-        () => operators.DedupOps.dedupIndexBuild(spark, sfDir)),
-      ("knn_graph_pre_build", Set("knn_graph_incremental"),
-        () => operators.AnnOps.knnGraphPreBuild(spark, sfDir)),
-      // round-16: the layered index's standing pre-batch state
-      ("cknn_graph_pre_build", Set("ann_layered_incremental",
-        "streaming_ann_refresh"),
-        () => operators.Round16Ops.cknnGraphPreBuild(spark, sfDir)),
-      // round-17: the epoch-capped maintenance legs' standing
-      // epoch-0 capped graph
-      ("ccap_graph_pre_build", Set("ann_layered_cap_incremental",
-        "streaming_ann_cap_refresh"),
-        () => operators.Round17Ops.ccapGraphPreBuild(spark, sfDir)),
-      // round-14: the eval family's trained models are run-shared
-      // ModelStore artifacts — these rows carry the one-time trainings
-      ("gbt_model_build", Set(
-        "q_gbt_eval", "q_calibration", "q_confusion",
-        "sample_holdout_eval", "q_cv_auc", "sample_learning_curve",
-        "streaming_model_score", "streaming_drift_psi",
-        "q_gbt_importance", "q_model_compare", "q_cost_curve",
-        "q_isotonic_calibration", "sample_slice_eval",
-        "streaming_confusion_monitor", "q_model_compare_cv",
-        "q_calibration_cv", "q_calibration_fix", "q_threshold_transfer",
-        "q_calibration_oos", "q_calibration_oos_gated"),
-        () => operators.ModelStore.gbtModelBuild(spark, sfDir)),
-      ("forest_model_build", Set(
-        "q_forest_eval", "q_oob_eval", "q_feature_importance",
-        "q_model_compare"),
-        () => operators.ModelStore.forestModelBuild(spark, sfDir)),
-      // round-15: the forest protocol artifacts (CV + curve)
-      ("forest_cv_build", Set(
-        "q_forest_cv_auc", "sample_forest_curve", "q_model_compare_cv",
-        "q_forest_importance_cv"),
-        () => operators.ModelStore.forestProtocolsBuild(spark, sfDir)),
-      // round-14: the batch IVM family's standing view-state tables
-      ("ivm_state_build", Set(
-        "warehouse_ivm", "warehouse_ivm_join", "warehouse_ivm_distinct"),
-        () => operators.Round12Ops.IvmStateStore.build(spark, sfDir)))
-    val buildRuns = substrateBuilds.flatMap { case (name, gates, fn) =>
-      if (gates.exists(selected.contains)) {
-        // run 1: the real build, under the run's store root — this is
-        // the store every probe query reads.
-        CacheHygiene.release(spark, blocking = true)
-        val t0 = System.nanoTime()
-        // a failing build must not abort the whole bench (the probe
-        // queries rebuild lazily and time the failure themselves);
-        // record a negative sentinel so the JSON still carries a row
-        val ok = try { fn(); true } catch { case _: Throwable => false }
-        val t1 = (System.nanoTime() - t0) / 1e9
-        // run 2 (round-12 judge item #4): an A/B rebuild under a FRESH
-        // store root. The per-JVM store caches key on the RESOLVED
-        // root (H20, spec-pinned), so this is a genuine cold rebuild —
-        // the VarianceProbe discipline applied to `_build` rows, which
-        // a same-root re-run could never falsify (the second call is a
-        // ~0s cache no-op). min-of-two separates ambient interference
-        // from a real build regression; the original root is restored
-        // so every probe query still reads the run-shared store.
-        val t2: Option[Double] = if (!ok) None else {
-          val key = sources.StoreRoot.confKey
-          val origRoot = spark.conf.getOption(key)
-          val fresh =
-            java.nio.file.Files.createTempDirectory("graft-ab-build")
-          try {
-            spark.conf.set(key, fresh.toString)
-            CacheHygiene.release(spark, blocking = true)
-            val s0 = System.nanoTime()
-            fn()
-            Some((System.nanoTime() - s0) / 1e9)
-          } catch { case _: Throwable => None }
-          finally {
-            origRoot match {
-              case Some(r) => spark.conf.set(key, r)
-              case None => spark.conf.unset(key)
-            }
-            // the A/B root exists only to force a cold rebuild — its
-            // artifacts are never read again; leaving them would leak
-            // a full store copy per build row per run
-            sources.StoreRoot.deleteRecursively(fresh)
-          }
-        }
-        Some((name, if (ok) Seq(t1) ++ t2.toSeq else Seq(-1.0)))
-      } else None
-    }
-    var runs = buildRuns ++
-      selected.toSeq.map { case (name, fn) => (name, timed(fn, 2)) }
-    // Round-over-round drift check: diff this run's min times against
-    // the PRIOR full-surface snapshot (before overwriting it). A
-    // flagged "regression" is usually ambient interference (suite GC,
-    // JIT storms, OS noise) inflating both timed runs of one query —
-    // round-7's committed snapshot overstated five queries by
-    // 0.5-0.9 s each that way. So flagged queries are automatically
-    // RE-RUN in a quiet second pass and the min across all runs is
-    // what the snapshot records; only a slowdown that survives the
-    // re-run is reported as a real regression (stderr, so the
-    // driver's stdout tail-capture of the one JSON line stays intact).
+    // Store builds are timed on rows of their own, so the probe rows
+    // time what a warm store sustains. Each build runs twice: once
+    // under the run's store root (the store every probe reads), once
+    // cold under a fresh root (Harness.run) — min-of-two separates
+    // ambient interference from a real build regression.
+    val buildRuns: Seq[(String, Reps)] = Harness.buildRows
+      .filter(_.readers.exists(selectedNames))
+      .map { b =>
+        b.name -> more(reps(Harness.timed(spark)(b.build(spark, sfDir))), b)
+      }
+    var runs: Seq[(String, Reps)] =
+      buildRuns ++ selected.map(q => q.name -> timed(q))
+
+    // Drift check: diff this run's min times against the PRIOR
+    // full-surface snapshot (before overwriting it). A flagged
+    // "regression" is usually ambient interference inflating both
+    // timed runs of one query, so flagged queries are RE-RUN in a
+    // second pass and the min across all runs is what the snapshot
+    // records; only a slowdown that survives the re-run is reported
+    // (stderr, so the stdout JSON line stays intact). Build rows are
+    // excluded: their min is already min-of-two builds.
+    val mapper = new ObjectMapper()
+    val priorPath = Paths.get("BENCH_DETAIL.json")
     val priorMin: Map[String, Double] =
-      if (args.nonEmpty) Map.empty
-      else try {
-        val priorPath = java.nio.file.Paths.get("BENCH_DETAIL.json")
-        if (!java.nio.file.Files.exists(priorPath)) Map.empty
-        else {
-          val prior = new String(java.nio.file.Files.readAllBytes(priorPath), "UTF-8")
-          val minRe = """"([A-Za-z0-9_]+)":\{"min":([0-9.Ee+-]+)""".r
-          minRe.findAllMatchIn(prior)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      } catch { case _: Throwable => Map.empty }
-    // `*_build` rows are excluded from the flagged-rerun loop (the
-    // rerun path re-invokes queries from `selected`, and a same-root
-    // rebuild is a ~0s cache no-op anyway) — but they are no longer
-    // unverifiable: each build row's min is already min-of-two COLD
-    // builds (the fresh-root A/B above), so its BENCH_DETAIL value is
-    // interference-filtered at the source
-    def regressions(rs: Seq[(String, Seq[Double])]) = rs.flatMap {
-      case (n, ts) => priorMin.get(n).map(p => (n, p, ts.min, ts.min - p))
-    }.filter { case (n, p, mn, d) =>
-      d > 0.2 && mn > p * 1.3 && !n.endsWith("_build")
-    }.sortBy(-_._4)
+      if (args.nonEmpty || !Files.exists(priorPath)) Map.empty
+      else mapper.readTree(priorPath.toFile).path("queries")
+        .properties().asScala
+        .flatMap(e => Option(e.getValue.get("min")).filter(_.isNumber)
+          .map(m => e.getKey -> m.asDouble))
+        .toMap
+    def regressions(rs: Seq[(String, Reps)]) = rs.collect {
+      case (n, Right(ts)) if priorMin.contains(n) && !n.endsWith("_build") =>
+        (n, priorMin(n), ts.min, ts.min - priorMin(n))
+    }.filter { case (_, p, mn, d) => d > 0.2 && mn > p * 1.3 }.sortBy(-_._4)
     if (priorMin.nonEmpty) {
       val flagged = regressions(runs).map(_._1).toSet
       if (flagged.nonEmpty) {
         System.err.println(
           s"[bench] re-running ${flagged.size} flagged quer${if (flagged.size == 1) "y" else "ies"} to separate interference from regression")
-        val rerun = selected.toSeq.filter(q => flagged.contains(q._1))
-          .map { case (name, fn) => name -> timed(fn, 2) }.toMap
-        runs = runs.map { case (n, ts) =>
-          (n, ts ++ rerun.getOrElse(n, Nil))
+        val rerun = selected.filter(q => flagged(q.name))
+          .map(q => q.name -> timed(q)).toMap
+        runs = runs.map { case (n, r) =>
+          n -> rerun.get(n).fold(r)(again => r.flatMap(ts => again.map(ts ++ _)))
         }
       }
       val persisting = regressions(runs)
@@ -230,30 +108,33 @@ object Bench {
         }
       } else System.err.println("[bench] no regressions vs prior snapshot")
     }
-    val results = runs.map { case (n, ts) => n -> ts.min }
-    def jsonMap(m: Seq[(String, Double)], fmt: Double => String): String =
-      m.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+
+    val failed = runs.collect { case (n, Left(f)) => n -> f }
+    failed.foreach { case (n, f) => System.err.println(s"[bench] $n failed: $f") }
+    val results = runs.collect { case (n, Right(ts)) => n -> ts.min }
     val total = results.map(_._2).sum
-    // `floor` is the watch-gating estimate (round-15 judge item #2):
-    // the min across ALL reps of the row — ≥3 reps for sub-3 s rows,
-    // plus any flagged-rerun reps — with `spread` (max − min) and
-    // `reps` recording how trustworthy that floor draw is. §5's watch
-    // rule gates on floor, not on any single min-of-2 draw. (`min` is
-    // kept as an alias: the drift check above and older tooling read
-    // it.)
-    val detailQ = runs.map { case (n, ts) =>
-      "\"" + n + "\":{\"min\":" + ts.min + ",\"mean\":" + (ts.sum / ts.size) +
-        ",\"floor\":" + ts.min + ",\"spread\":" + (ts.max - ts.min) +
-        ",\"reps\":" + ts.size + "}"
-    }.mkString("{", ",", "}")
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","agg":"min_of_runs","queries":$detailQ,"sf":"$sfDir"}"""
+    // `floor` is the watch-gating estimate: the min across ALL reps of
+    // the row (≥3 for sub-3 s rows, plus any re-run reps), with
+    // `spread` (max − min) and `reps` recording how trustworthy that
+    // floor draw is. `min` is kept as an alias older tooling reads.
+    val detail = mapper.createObjectNode()
+      .put("metric", "total").put("value", total).put("unit", "sec")
+      .put("agg", "min_of_runs")
+    val detailQ = detail.putObject("queries")
+    runs.foreach {
+      case (n, Right(ts)) => detailQ.putObject(n).put("status", "ok")
+        .put("min", ts.min).put("mean", ts.sum / ts.size)
+        .put("floor", ts.min).put("spread", ts.max - ts.min)
+        .put("reps", ts.size)
+      case (n, Left(f)) => detailQ.putObject(n).put("status", "failed")
+        .put("error", f.toString)
+    }
+    detail.put("sf", sfDir)
     // arg-filtered runs must not clobber the full-surface snapshot
     val detailFile =
       if (args.isEmpty) "BENCH_DETAIL.json" else "BENCH_DETAIL_partial.json"
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get(detailFile),
-        detail.getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    Files.write(Paths.get(detailFile),
+      mapper.writeValueAsString(detail).getBytes("UTF-8"))
     // The driver tail-captures only the last 2000 chars of output; a
     // 76-entry map doesn't fit. Print a headline subset covering every
     // operator family; BENCH_DETAIL.json has all of them.
@@ -271,8 +152,11 @@ object Bench {
       "streaming_cms", "sample_weighted", "sketch_hll_distinct",
       "streaming_interval_join", "sketch_kmv_setops", "ann_ivf_pq",
       "sample_quality_mix")
-    val compact = jsonMap(results.filter(r => headline.contains(r._1)), v => f"$v%.3f")
-    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$compact,"sf":"$sfDir"}""")
+    val compact = results.filter(r => headline.contains(r._1))
+      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    val failedNames = failed.map(f => "\"" + f._1 + "\"").mkString("[", ",", "]")
+    println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$compact,"failed":$failedNames,"sf":"$sfDir"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

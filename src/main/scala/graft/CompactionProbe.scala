@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Compaction-scheduling probe for the `IndexStore` lifecycle
@@ -35,13 +35,7 @@ object CompactionProbe {
     val ks: Seq[Int] =
       if (args.length > 2) args.drop(2).toSeq.map(_.toInt)
       else Seq(1, 2, 4, 8, 16)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
 
     // same replication discipline as ScaleProbe: salt tokens per

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -24,25 +24,19 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factors: Seq[Int] =
       if (args.length > 1) args.drop(1).toSeq.map(_.toInt) else Seq(5, 10)
-    // SPARK_GRAFT_PROBE_PARTITIONS: size the shuffle to the probed
-    // scale — a ×100 replica corpus on 32 partitions crosses the
-    // per-task sort-spill threshold, and naming that cause (vs taking
-    // the super-linear ratio at face value) needs the A/B
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_PROBE_PARTITIONS", "32")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = Harness.session(extraConf = Map(
       // graft extensions: inert except on marker column names — lets the
       // vhash probes compare the H16 columnar lane vs the codegen row path
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.session.timeZone", "UTC")
+      "spark.sql.extensions" -> "graft.plans.GraftExtensions",
       // events.parquet carries TIMESTAMP(NANOS); read as long (pruned
       // away anyway — probes only use ids/type)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true") ++
+      // SPARK_GRAFT_PROBE_PARTITIONS: size the shuffle to the probed
+      // scale — a ×100 replica corpus on one partition per core crosses
+      // the per-task sort-spill threshold, and naming that cause (vs
+      // taking the super-linear ratio at face value) needs the A/B
+      sys.env.get("SPARK_GRAFT_PROBE_PARTITIONS")
+        .map("spark.sql.shuffle.partitions" -> _))
     spark.sparkContext.setLogLevel("ERROR")
 
     def replicate(df: DataFrame, times: Int, idCols: Seq[String], offset: Long): DataFrame =

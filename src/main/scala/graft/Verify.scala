@@ -1,53 +1,65 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
+import org.apache.spark.sql.SparkSession
+
+import graft.Harness.{Failed, Plan}
+import graft.sources.StoreRoot
+
+/** Correctness dump: each query's result → `<outDir>/<name>/`
+  * parquet, plus `oracle_sql.json` (the DuckDB oracles) and
+  * `expected.json` (every query key attempted), for the DuckDB compare
+  * in `tools/check.py`. A query that throws leaves no output directory,
+  * so the compare counts it as FAIL.
+  *
+  *   sbt "runMain graft.Verify <sfDir> <outDir> [name,name,...]"
+  *
+  * Exits 1 if any query failed. The optional third argument filters
+  * the run to the named queries (local iteration only).
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (local
-    // iteration only — the driver always runs the full surface)
     val (sfDir, outDir) = (args(0), args(1))
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // release each query's operator-internal persists (cached tables
-      // AND localCheckpoint RDD blocks) before the next one — the full
-      // 129-query sweep in one session would otherwise accumulate
-      // every cached relation until LRU/spill pressure
-      CacheHygiene.release(spark)
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val only = args.lift(2).map(_.split(",").toSet)
+    val spark = Harness.session()
+    val errors = run(spark, SparkEntry.queries, sfDir, outDir, only)
     spark.stop()
+    errors.foreach { case (name, err) =>
+      System.err.println(s"[verify] $name failed: $err")
+    }
+    if (errors.nonEmpty) sys.exit(1)
+  }
+
+  /** Write every query (passing `only`, if given) to `outDir`, along with
+    * `expected.json` and the matching `oracle_sql.json`. Returns the
+    * queries that failed, with their errors. */
+  def run(spark: SparkSession,
+      queries: Map[String, Plan], sfDir: String, outDir: String,
+      only: Option[Set[String]]): Seq[(String, String)] = {
+    val attempted = queries.filter { case (name, _) => only.forall(_(name)) }
+    Files.createDirectories(Paths.get(outDir))
+    val mapper = new ObjectMapper()
+    mapper.writeValue(Paths.get(outDir, "expected.json").toFile,
+      attempted.keys.toSeq.sorted.toArray)
+    val oracle = mapper.createObjectNode()
+    SparkEntry.oracleSql.filter { case (k, _) => only.forall(_(k)) }
+      .foreach { case (k, sql) => oracle.put(k, sql) }
+    mapper.writeValue(Paths.get(outDir, "oracle_sql.json").toFile, oracle)
+    val errors = attempted.toSeq.flatMap { case (name, plan) =>
+      // a stale directory from an earlier run must not pass for this one
+      StoreRoot.deleteRecursively(Paths.get(outDir, name))
+      Harness.timed(spark)(plan(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name")) match {
+        case f: Failed => Some(name -> f.toString)
+        case _ => None
+      }
+    }
+    // Harness.timed releases before each query; release the last one's
+    // persists too, so a caller's session is left as it was found
+    CacheHygiene.release(spark)
+    errors
   }
 }

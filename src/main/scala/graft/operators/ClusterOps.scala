@@ -49,7 +49,6 @@ object ClusterOps {
         .filter(col("a") =!= col("c"))
         .select(col("a"), col("c").as("b")))
       .distinct()
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
     // Squaring count is GRAPH-SIZE conditional: each squaring doubles
     // per-round reach (fewer loop rounds — each round is ~1 s of fixed
     // job overhead locally) but materializes a checkpointed self-join
@@ -59,15 +58,7 @@ object ClusterOps {
     // ×20 replicas one squaring wins (16.3 s vs 25.0 s — the squared
     // edge set costs more than the extra round). edges1 is already
     // checkpointed, so the deciding count() is a near-free cached scan.
-    val nEdges = edges1.count()
-    // override knob: malformed values fall back to the size-based
-    // default rather than crashing the query; clamp to [0, 3] (0 =
-    // plain propagation, >3 squarings never pays — reach is 2^3 hops)
-    val nSq = sys.env.get("GRAFT_CC_SQUARINGS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .map(n => math.max(0, math.min(3, n)))
-      .getOrElse(if (nEdges <= 50000L) 2 else 1)
-    if (dbg) println(s"[cc] edges=$nEdges squarings=$nSq")
+    val nSq = if (edges1.count() <= 50000L) 2 else 1
     val edges = (1 to nSq).foldLeft(edges1)((e, _) =>
       square(e).localCheckpoint(true))
     // iterative plans MUST truncate lineage each round
@@ -84,7 +75,6 @@ object ClusterOps {
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val t0 = System.nanoTime()
       // each node adopts min(own label, neighbors' labels)
       val neighborMin = edges
         .join(labels.withColumnRenamed("id", "b").withColumnRenamed("label", "nl"), "b")
@@ -119,7 +109,6 @@ object ClusterOps {
       labels = next.select(col("id"), col("label"))
       converged = changed == 0
       i += 1
-      if (dbg) println(f"[cc] round $i: ${(System.nanoTime() - t0) / 1e9}%.2f s changed=$changed")
     }
     // The DuckDB oracle takes the exact transitive closure; returning a
     // partially-propagated labeling would diverge from it silently.

@@ -273,10 +273,7 @@ object Round12Ops {
     * reached 0. Returns the staged handle; the table is unchanged
     * until publish. */
   private[graft] def ivmStage(tbl: SnapshotTable,
-      batch: DataFrame,
-      phase: (String, Double) => Unit = (_, _) => ())
-      : SnapshotTable#StagedMerge = {
-    def timed[T](name: String)(f: => T): T = phaseTimed(phase, name)(f)
+      batch: DataFrame): SnapshotTable#StagedMerge = {
     // keys and the maintained relation are each consumed by several
     // downstream jobs (touched semi join, delete anti-join, the
     // touched-bucket plan, the staged write) — eager checkpoints so
@@ -284,21 +281,21 @@ object Round12Ops {
     // (r19 re-measured: dropping the keys checkpoint pushes a distinct
     // shuffle into every consumer and reads WORSE — 3.11 → 4.23 s
     // commit_stage floor — so it stays).
-    val keys = timed("stage_keys")(batch.filter(col("old_st").isNotNull)
+    val keys = batch.filter(col("old_st").isNotNull)
         .select(concat_ws("|", col("old_st"), col("old_prio")).as("k"))
       .unionByName(batch.filter(col("new_st").isNotNull)
         .select(concat_ws("|", col("new_st"), col("new_prio")).as("k")))
-      .distinct().localCheckpoint(true))
+      .distinct().localCheckpoint(true)
     val touched = tbl.read().join(broadcast(keys), Seq("k"), "left_semi")
       .select(col("st"), col("prio"), col("n_orders"), col("total"))
-    val upserts = timed("stage_maintain")(
-      ivmWithKey(ivmMaintain(touched, batch)).localCheckpoint(true))
+    val upserts =
+      ivmWithKey(ivmMaintain(touched, batch)).localCheckpoint(true)
     val deletes = keys.join(upserts.select(col("k")), Seq("k"), "left_anti")
     // `keys` IS the batch-key relation (deletes = keys ∖ upserts and
     // every upsert key ∈ keys), so the stage's touched-bucket job and
     // anti-join read the cached checkpoint instead of re-deriving
     // updates ∪ deletes (r19 optimization)
-    timed("stage_write")(tbl.stageMerge(upserts, Some(deletes), Some(keys)))
+    tbl.stageMerge(upserts, Some(deletes), Some(keys))
   }
 
   /** The full WAP maintenance commit: stage, audit EXACT count
@@ -309,49 +306,30 @@ object Round12Ops {
     * aborted — the current snapshot never exposes the bad batch.
     * `knownPre` lets a chained caller (the G23 stream) carry the
     * running total instead of re-reading the table per epoch; returns
-    * the audited post total for that chaining. `phase` is the r18
-    * watch's per-commit instrumentation hook (`graft.tools
-    * .IvmPhaseProbe`): driver-side nanoTime around the three commit
-    * legs — stage (the bucket rewrite's jobs), audit (the would-be
-    * table read + batch counts), publish (metadata renames) — a
-    * no-op closure on the shipped path, zero Spark-side change. */
-  /** nanoTime one leg and report it to a phase hook — ONE definition
-    * for both halves of the instrumentation chain (r19 review: the
-    * G23 twin had its own copy). */
-  private[graft] def phaseTimed[T](phase: (String, Double) => Unit,
-      name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    phase(name, (System.nanoTime() - t0) / 1e9)
-    r
-  }
-
+    * the audited post total for that chaining. */
   private[graft] def ivmSnapshotStep(tbl: SnapshotTable,
-      batch: DataFrame, knownPre: Option[Long] = None,
-      phase: (String, Double) => Unit = (_, _) => ()): Long = {
-    def timed[T](name: String)(f: => T): T = phaseTimed(phase, name)(f)
-    val staged = timed("commit_stage")(ivmStage(tbl, batch, phase))
-    val (pre, post, asserts, retracts) = timed("commit_audit") {
-      val pre = knownPre.getOrElse(tbl.read()
-        .agg(coalesce(sum(col("n_orders")), lit(0L))).first().getLong(0))
-      // ONE audit job, not two (r19 optimization): the staged-table
-      // total and the batch's assert/retract counts are independent
-      // 1-row aggregates, so a crossJoin runs both subtrees in a
-      // single driver-synchronous job
-      val cnts = staged.read()
-        .agg(coalesce(sum(col("n_orders")), lit(0L)).as("post"))
-        .crossJoin(batch.agg(
-          count(when(col("new_st").isNotNull, lit(1))).as("a"),
-          count(when(col("old_st").isNotNull, lit(1))).as("r")))
-        .first()
-      (pre, cnts.getLong(0), cnts.getLong(1), cnts.getLong(2))
-    }
+      batch: DataFrame, knownPre: Option[Long] = None): Long = {
+    val staged = ivmStage(tbl, batch)
+    val pre = knownPre.getOrElse(tbl.read()
+      .agg(coalesce(sum(col("n_orders")), lit(0L))).first().getLong(0))
+    // ONE audit job, not two (r19 optimization): the staged-table
+    // total and the batch's assert/retract counts are independent
+    // 1-row aggregates, so a crossJoin runs both subtrees in a
+    // single driver-synchronous job
+    val cnts = staged.read()
+      .agg(coalesce(sum(col("n_orders")), lit(0L)).as("post"))
+      .crossJoin(batch.agg(
+        count(when(col("new_st").isNotNull, lit(1))).as("a"),
+        count(when(col("old_st").isNotNull, lit(1))).as("r")))
+      .first()
+    val (post, asserts, retracts) =
+      (cnts.getLong(0), cnts.getLong(1), cnts.getLong(2))
     if (post != pre + asserts - retracts) {
       staged.abort()
       sys.error(s"ivm audit failed: expected ${pre + asserts - retracts} " +
         s"rows in the maintained view, staged table has $post — batch " +
         "rejected, current snapshot unchanged")
-    } else { timed("commit_publish")(staged.publish()); post }
+    } else { staged.publish(); post }
   }
 
   val warehouseIvmSql: String =

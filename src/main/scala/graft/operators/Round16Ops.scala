@@ -155,32 +155,7 @@ object Round16Ops {
         gf.h32(concat(lit(salt), col("vec_id").cast("string")))
           .as("h"))
       .crossJoin(broadcast(nstats))
-    // r18 watch instrumentation (graft.tools.ExemplarAB): the pre-r17
-    // global rank-window form, selectable per-JVM so the open
-    // ann_layered_incremental watch can A/B the exemplar edit in ONE
-    // session. Production never sets the property; the shipped path
-    // is the scan-side threshold below.
-    if (sys.props.get("graft.exemplars.ab").contains("window"))
-      return hashed
-        .withColumn("rn",
-          row_number().over(Window.orderBy(col("h"), col("nid"))))
-        .filter(col("rn") <= col("n_ex"))
-        .select(col("nid"))
     val global = Window.orderBy(col("h"), col("nid"))
-    // r18 watch instrumentation (graft.tools.GuardAB): the layered
-    // family's r18 guard premium was bounded at ~0.3 s by pair
-    // comparison; if the r19 committed draw still reads above
-    // floor+0.3+band, this per-JVM switch lets ONE session A/B the
-    // sentinel-union guard itself (threshold + exact trim, no
-    // sentinel row, no survivor-count window — results identical on
-    // any corpus where the guard would not have fired). Production
-    // never sets the property.
-    if (sys.props.get("graft.exemplars.guard").contains("off"))
-      return hashed
-        .filter(col("h") < col("thr"))
-        .withColumn("rn", row_number().over(global))
-        .filter(col("rn") <= col("n_ex"))
-        .select(col("nid"))
     // loud structural guard (r17 advisor): the ×4 margin makes a
     // starved trim an e^{−Ω(n_ex)} tail, but a probability is not a
     // structure — if fewer than n_ex rows survived a NON-saturated

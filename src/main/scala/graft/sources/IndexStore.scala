@@ -76,7 +76,13 @@ final class IndexStore(
 
   private def manifest: Path = Paths.get(path, "MANIFEST")
 
-  private def tableName(seg: Int): String = s"${name}_seg$seg"
+  // the catalog name carries the store's location: a session-wide
+  // catalog entry shared by two stores of one name at different roots
+  // would leave the first store reading the second one's segments
+  private val pathTag = Integer.toHexString(
+    Paths.get(path).toAbsolutePath.normalize.toString.hashCode)
+
+  private def tableName(seg: Int): String = s"${name}_${pathTag}_seg$seg"
 
   private def readSegList(p: Path): Seq[Int] =
     Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty).map(_.toInt)

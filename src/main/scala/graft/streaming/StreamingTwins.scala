@@ -1188,23 +1188,10 @@ object StreamingTwins {
     * discipline), and hash equality proves per-batch maintenance ≡
     * one-shot maintenance ≡ recompute. Decimals round-trip parquet
     * exactly, so epoch commits cannot drift a cent. */
-  def streamingIvm(spark: SparkSession, sfDir: String): DataFrame =
-    streamingIvmPhased(spark, sfDir, (_, _) => ())
-
-  /** [[streamingIvm]] with the r18-watch phase hook threaded through
-    * (`graft.tools.IvmPhaseProbe`): driver-side nanoTime around each
-    * serial leg — staging (memoized, first run only), seed create,
-    * the seed-total read, the stream wall (which contains the
-    * per-commit stage/audit/publish sub-phases via
-    * `ivmSnapshotStep`'s hook). The shipped query passes a no-op:
-    * zero plan or job change. */
-  private[graft] def streamingIvmPhased(spark: SparkSession,
-      sfDir: String, phase: (String, Double) => Unit): DataFrame = {
+  def streamingIvm(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.operators.Round12Ops
-    def timed[T](name: String)(f: => T): T =
-      Round12Ops.phaseTimed(phase, name)(f)
     val (old, neu) = Round12Ops.ivmSnapshots(spark, sfDir)
-    val stageDir = timed("staging")(ivmStaged.computeIfAbsent(sfDir, { _ =>
+    val stageDir = ivmStaged.computeIfAbsent(sfDir, { _ =>
       val dir = Files.createTempDirectory("graft_stream_ivm").toString
       val delta = Round12Ops.ivmDelta(old, neu)
       (0 to 2).foreach { b =>
@@ -1217,36 +1204,33 @@ object StreamingTwins {
         (d +: d.listFiles().toSeq).foreach(_.setLastModified(t0 + i * 4000L))
       }
       dir
-    }))
+    })
     val deltaSchema = Round12Ops.ivmDelta(old, neu).schema
     val tableDir =
       Files.createTempDirectory("graft_ivm_tbl").toString + "/state"
     // seed: the standing view state over the OLD snapshot, as v1
-    timed("seed_create")(Round12Ops.ivmTable(spark, tableDir)
-      .create(Round12Ops.ivmWithKey(Round12Ops.ivmState(old))))
+    Round12Ops.ivmTable(spark, tableDir)
+      .create(Round12Ops.ivmWithKey(Round12Ops.ivmState(old)))
     val src = spark.readStream.schema(deltaSchema)
       .option("maxFilesPerTrigger", 1).parquet(s"$stageDir/batch_*")
     // the audit's pre-commit total carries across epochs (seeded from
     // the created table once) — foreachBatch runs serially
-    var runningTotal = timed("seed_total_read")(
-      Round12Ops.ivmTable(spark, tableDir).read()
-        .agg(coalesce(sum(col("n_orders")), lit(0L))).first().getLong(0))
-    timed("stream_wall") {
-      val q = src.writeStream.outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          // one WAP-gated maintenance commit per micro-batch; the
-          // handle is memoized per dir (r15: it carries the live-schema
-          // cache across batches), so every batch reuses the instance
-          // bound to the OUTER session — fine in this single-JVM
-          // harness, where micro-batch sessions are clones sharing the
-          // session state the handle reads (conf + parquet reads)
-          runningTotal = Round12Ops.ivmSnapshotStep(
-            Round12Ops.ivmTable(batch.sparkSession, tableDir), batch,
-            Some(runningTotal), phase)
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
+    var runningTotal = Round12Ops.ivmTable(spark, tableDir).read()
+      .agg(coalesce(sum(col("n_orders")), lit(0L))).first().getLong(0)
+    val q = src.writeStream.outputMode("append")
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        // one WAP-gated maintenance commit per micro-batch; the
+        // handle is memoized per dir (r15: it carries the live-schema
+        // cache across batches), so every batch reuses the instance
+        // bound to the OUTER session — fine in this single-JVM
+        // harness, where micro-batch sessions are clones sharing the
+        // session state the handle reads (conf + parquet reads)
+        runningTotal = Round12Ops.ivmSnapshotStep(
+          Round12Ops.ivmTable(batch.sparkSession, tableDir), batch,
+          Some(runningTotal))
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
     Round12Ops.ivmTable(spark, tableDir).read()
       .select(col("st").as("o_orderstatus"),
         col("prio").as("o_orderpriority"), col("n_orders"),

@@ -1,21 +1,21 @@
 package graft.tools
 
+import java.lang.management.ManagementFactory
+
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-import graft.{CacheHygiene, SparkEntry, Tables}
+import graft.Harness
 
-/** Per-query job/stage profile (r20 optimization round; guide §1.1's
-  * empirical loop without a UI): attach a listener, run the row the
-  * bench's way, and report where the wall went — SERIAL JOB COUNT,
-  * per-job wall, the DRIVER GAPS between jobs (scheduler round-trips,
-  * plan analysis, broadcast builds), and the stages whose task count
-  * is far below the slot count (row-starved CPU-bound kernels). The
-  * r19 session ran this shape as a scratch overlay; committed now so
-  * the measurement that picks each round's targets is reproducible.
+/** Per-row job/stage profile: attach a listener, run the row the
+  * bench's way (Harness.run), and report where the wall went — JVM GC
+  * time, SERIAL JOB COUNT, per-job wall, the DRIVER GAPS between jobs
+  * (scheduler round-trips, plan analysis, broadcast builds), and the
+  * stages whose task count is far below the slot count (row-starved
+  * CPU-bound kernels). Build rows rebuild cold on every rep.
   *
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.JobProfile q_item_cf 3"
   *   sbt "runMain graft.tools.JobProfile gbt_model_build 2"   # cold builds
@@ -79,73 +79,25 @@ object JobProfile {
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val probe = new Probe
     spark.sparkContext.addSparkListener(probe)
+    Harness.warmUp(spark, sfDir)
+    def gcMillis: Long = ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime).sum
 
-    // the bench's build rows are lifecycle hooks, not SparkEntry
-    // queries — mirror them here; each rep rebuilds COLD under a
-    // fresh store root (the bench's A/B discipline)
-    val builds: Map[String, () => Unit] = Map(
-      "gbt_model_build" ->
-        (() => graft.operators.ModelStore.gbtModelBuild(spark, sfDir)),
-      "forest_model_build" ->
-        (() => graft.operators.ModelStore.forestModelBuild(spark, sfDir)),
-      "forest_cv_build" ->
-        (() => graft.operators.ModelStore.forestProtocolsBuild(spark, sfDir)),
-      "dedup_index_build" ->
-        (() => graft.operators.DedupOps.dedupIndexBuild(spark, sfDir)),
-      "bm25_standing_build" ->
-        (() => graft.operators.RetrievalOps.bm25StandingBuild(spark, sfDir)),
-      "phrase_standing_build" ->
-        (() => graft.operators.Round10bOps.phraseStandingBuild(spark, sfDir)),
-      "knn_graph_pre_build" ->
-        (() => graft.operators.AnnOps.knnGraphPreBuild(spark, sfDir)),
-      "cknn_graph_pre_build" ->
-        (() => graft.operators.Round16Ops.cknnGraphPreBuild(spark, sfDir)),
-      "ccap_graph_pre_build" ->
-        (() => graft.operators.Round17Ops.ccapGraphPreBuild(spark, sfDir)),
-      "ivm_state_build" ->
-        (() => graft.operators.Round12Ops.IvmStateStore.build(spark, sfDir)))
-
-    Seq(Tables.lineitem _, Tables.orders _, Tables.documents _,
-      Tables.events _, Tables.embeddings _)
-      .foreach(t => t(spark, sfDir).count())
-
-    def once(name: String): Double = {
-      CacheHygiene.release(spark, blocking = true)
-      probe.reset()
-      val t0 = System.nanoTime()
-      if (builds.contains(name)) {
-        val key = graft.sources.StoreRoot.confKey
-        val origRoot = spark.conf.getOption(key)
-        val fresh = java.nio.file.Files.createTempDirectory("graft-prof")
-        try { spark.conf.set(key, fresh.toString); builds(name)() }
-        finally {
-          origRoot match {
-            case Some(r) => spark.conf.set(key, r)
-            case None => spark.conf.unset(key)
-          }
-          graft.sources.StoreRoot.deleteRecursively(fresh)
-        }
-      } else SparkEntry.queries(name)(spark, sfDir).count()
-      (System.nanoTime() - t0) / 1e9
-    }
     // rep 0 = warmup (codegen/JIT for this plan shape), unreported
-    // except as context; builds stay cold per rep via the fresh root
+    // except as context; build rows run cold per rep (Harness.run)
     probe.enabled = true
-    names.foreach { name =>
+    names.map(Harness.row).foreach { row =>
       (0 to reps).foreach { i =>
-        val w = once(name)
-        println(s"[$name rep$i] " + probe.report(w))
+        probe.reset()
+        val g0 = gcMillis
+        val out = Harness.run(spark, sfDir, row)
+        println(s"[${row.name} rep$i] gc_ms=${gcMillis - g0} " + (out match {
+          case Harness.Ok(wall) => probe.report(wall)
+          case f: Harness.Failed => s"FAILED $f"
+        }))
       }
     }
     spark.stop()

@@ -1,86 +1,47 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
 
-import graft.{CacheHygiene, SparkEntry, Tables}
-
-/** Generic per-commit A/B harness (r20; the GuardAB pattern
-  * generalized): times ONE query in ONE JVM with a named per-JVM
-  * property set to "on" (= unset, the shipped path) vs "off"
-  * (the pre-change form an operator keeps behind the switch),
-  * interleaved A/B/A/B so ambient drift hits both arms equally.
-  * This is the only trustworthy before/after on a machine whose
-  * ambient level moves 10-30% between JVMs (SURVEY §5).
+/** Generic per-commit A/B harness: times ONE row in ONE JVM with a
+  * named per-JVM property set to "on" (= the shipped path) vs "off"
+  * (the pre-change form an operator keeps behind the switch while the
+  * change is measured), interleaved A/B/A/B so ambient drift hits both
+  * arms equally. This is the only trustworthy before/after on a
+  * machine whose ambient level moves 10-30% between JVMs (SURVEY §5).
   *
-  *   sbt "runMain graft.tools.PropAB graft.ridrows.par q_cv_auc 8"
+  *   sbt "runMain graft.tools.PropAB <property> q_cv_auc 8"
   *
-  * For `*_build` rows the run rebuilds COLD under a fresh store root
-  * per rep (the bench's A/B discipline), so arms compare build cost,
-  * not cache hits.
+  * Build rows rebuild cold under a fresh store root per rep
+  * (Harness.run), so arms compare build cost, not cache hits.
   */
 object PropAB {
   def main(args: Array[String]): Unit = {
-    val prop = args.headOption.getOrElse("graft.ridrows.par")
+    if (args.isEmpty) {
+      System.err.println("usage: PropAB <property> [row] [reps]")
+      sys.exit(2)
+    }
+    val prop = args(0)
     val name = args.lift(1).getOrElse("q_cv_auc")
     val reps = args.lift(2).map(_.toInt).getOrElse(8)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
+    val row = Harness.row(name)
 
-    val builds: Map[String, () => Unit] = Map(
-      "gbt_model_build" ->
-        (() => graft.operators.ModelStore.gbtModelBuild(spark, sfDir)),
-      "forest_model_build" ->
-        (() => graft.operators.ModelStore.forestModelBuild(spark, sfDir)),
-      "forest_cv_build" ->
-        (() => graft.operators.ModelStore.forestProtocolsBuild(spark, sfDir)),
-      "dedup_index_build" ->
-        (() => graft.operators.DedupOps.dedupIndexBuild(spark, sfDir)),
-      "bm25_standing_build" ->
-        (() => graft.operators.RetrievalOps.bm25StandingBuild(spark, sfDir)))
-
-    Seq(Tables.lineitem _, Tables.orders _, Tables.documents _,
-      Tables.events _, Tables.embeddings _)
-      .foreach(t => t(spark, sfDir).count())
-
-    def runOnce(): Unit =
-      if (builds.contains(name)) {
-        val key = graft.sources.StoreRoot.confKey
-        val origRoot = spark.conf.getOption(key)
-        val fresh = java.nio.file.Files.createTempDirectory("graft-ab")
-        try { spark.conf.set(key, fresh.toString); builds(name)() }
-        finally {
-          origRoot match {
-            case Some(r) => spark.conf.set(key, r)
-            case None => spark.conf.unset(key)
-          }
-          graft.sources.StoreRoot.deleteRecursively(fresh)
-        }
-      } else { SparkEntry.queries(name)(spark, sfDir).count(); () }
-
-    // warmup both plan shapes' codegen
-    Seq("on", "off").foreach { form =>
-      sys.props(prop) = form
-      runOnce()
-    }
     def rep(form: String): Double = {
       sys.props(prop) = form
-      CacheHygiene.release(spark, blocking = true)
-      val t0 = System.nanoTime()
-      runOnce()
-      (System.nanoTime() - t0) / 1e9
+      Harness.run(spark, sfDir, row) match {
+        case Harness.Ok(sec) => sec
+        case f: Harness.Failed => sys.error(s"$name ($prop=$form) failed: $f")
+      }
     }
     val out =
-      try (1 to reps).map(_ => (rep("on"), rep("off")))
-      finally sys.props.remove(prop)
+      try {
+        // warm both plan shapes' codegen
+        rep("on"); rep("off")
+        (1 to reps).map(_ => (rep("on"), rep("off")))
+      } finally sys.props.remove(prop)
     println(s"""{"prop":"$prop","query":"$name","sf":"$sfDir","reps":[""" +
       out.map { case (a, b) =>
         f"""{"on":$a%.3f,"off":$b%.3f}""" }.mkString(",") +

@@ -1,10 +1,14 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate.
 
-Runs graft.Verify's output (outDir/<name>/ parquet + oracle_sql.json)
-against DuckDB on the same sf dir and compares: schema (sorted column
-names), row count, and exact values (columns sorted by name, rows
-sorted). Usage:  python3 tools/check.py <sfDir> <verifyOutDir>
+Runs graft.Verify's output (outDir/<name>/ parquet, expected.json and
+oracle_sql.json) against DuckDB on the same sf dir. Every key in
+expected.json or oracle_sql.json is checked: a key with no output
+directory is a FAIL (its query threw); one with an oracle is compared
+on schema (sorted column names), row count, and exact values (columns
+sorted by name, rows sorted); one without is reported rows-only.
+Exits 1 if any key failed.
+Usage:  python3 tools/check.py <sfDir> <verifyOutDir>
 """
 import sys, os, json, glob
 import duckdb
@@ -63,13 +67,16 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracle = json.load(f)
+    with open(os.path.join(out_dir, "expected.json")) as f:
+        expected = json.load(f)
 
     n_pass = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
-        d = os.path.join(out_dir, name)
-        if not os.path.isdir(d):
+    for name in sorted(set(expected) | set(oracle)):
+        files = glob.glob(os.path.join(out_dir, name, "*.parquet"))
+        if not files:
+            print(f"FAIL {name}: no output")
+            n_fail += 1
             continue
-        files = glob.glob(os.path.join(d, "*.parquet"))
         got = con.execute(
             f"SELECT * FROM read_parquet({files!r})").fetchdf()
         if name not in oracle:

@@ -24,8 +24,11 @@ whose row reads AT or BELOW its prior floor in the builder's committed
 snapshot is dispositioned as driver-session ambient (one elevated
 single-shot read cannot re-base a floor); a driver strike that REPEATS
 across two rounds, or lands on a row the committed snapshot also shows
-out of band, escalates to per-commit instrumentation (the ExemplarAB /
-IvmPhaseProbe pattern).
+out of band, escalates to per-commit instrumentation (a same-JVM
+graft.tools.PropAB A/B or a graft.tools.JobProfile decomposition).
+
+Rows whose `status` is not "ok" (a query or build that threw) carry no
+floor: they are listed as FAILED and the ledger exits 1.
 
 Usage:
   python3 tools/ledger.py <prior_detail.json> <new_detail.json> [--cleared]
@@ -36,12 +39,16 @@ import sys
 
 
 def floors(path):
+    """(floor per ok row, total, {failed row: error})."""
     d = json.load(open(path))
     q = d.get("queries")
     if not isinstance(q, dict):
         raise SystemExit(f"{path}: no 'queries' dict — not a bench snapshot")
-    out = {}
+    out, failed = {}, {}
     for k, v in q.items():
+        if isinstance(v, dict) and v.get("status", "ok") != "ok":
+            failed[k] = v.get("error", v.get("status"))
+            continue
         f = v.get("floor") if isinstance(v, dict) else v
         if not isinstance(f, (int, float)):
             raise SystemExit(f"{path}: row {k!r} has no numeric floor ({v!r})")
@@ -49,7 +56,7 @@ def floors(path):
     # missing top-level total (a partial snapshot): fall back to the
     # floor sum so the f-string never formats None (r18 advisor)
     tot = d.get("value")
-    return out, tot if isinstance(tot, (int, float)) else sum(out.values())
+    return out, tot if isinstance(tot, (int, float)) else sum(out.values()), failed
 
 
 def band(pv):
@@ -75,9 +82,10 @@ def main():
     prior_path, new_path = sys.argv[1], sys.argv[2]
     show_cleared = "--cleared" in sys.argv
     driver_mode = "--driver" in sys.argv
-    prior, ptot = floors(prior_path)
-    new, ntot = floors(new_path)
+    prior, ptot, pfailed = floors(prior_path)
+    new, ntot, nfailed = floors(new_path)
     over, cleared, added, gone = diff(prior, new)
+    gone = [k for k in gone if k not in nfailed]  # listed under FAILED
     who = "driver read" if driver_mode else "new floor"
     print(f"committed total {ptot:.1f}s ({len(prior)} rows) -> "
           f"{who} total {ntot:.1f}s ({len(new)} rows)")
@@ -107,6 +115,13 @@ def main():
         print(f"\nCLEARED (at or below {'committed floor' if driver_mode else 'prior floor'}): {len(cleared)} rows")
         for k, pv, nv in sorted(cleared, key=lambda x: x[1] - x[2]):
             print(f"  {k:36s} {pv:7.2f} -> {nv:7.2f}")
+    failed = [(p, k, e) for p, fs in ((prior_path, pfailed), (new_path, nfailed))
+              for k, e in sorted(fs.items())]
+    if failed:
+        print(f"\nFAILED rows: {len(failed)}")
+        for p, k, e in failed:
+            print(f"  {k:36s} {p}: {e}")
+        sys.exit(1)
 
 
 if __name__ == "__main__":
