@@ -222,45 +222,12 @@ object Round12Ops {
   import graft.sources.SnapshotTable
 
   /** The state table handle: synthetic key `k` = st|prio, 4 buckets,
-    * retention spanning a seed + 3 maintenance epochs. Memoized per
-    * dir so every micro-batch commits through ONE instance and the
-    * widening guard's live-schema cache survives the whole run — a
-    * fresh handle per batch would re-seed the cache with a footer
-    * read per commit, exactly the r14 regression. */
-  private val ivmTables =
-    new java.util.LinkedHashMap[(SparkSession, String), SnapshotTable](
-        16, 0.75f, /* accessOrder = */ true) {
-      // LRU, oldest-evicted-first (r15 advisor — the previous
-      // size-trip clear() dropped EVERY memoized handle, including
-      // one actively committing a streaming run; eviction only costs
-      // that handle a footer re-seed on its next widening guard, but
-      // there is no reason to pay it on the hot entry)
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), SnapshotTable])
-          : Boolean =
-        size() > 64
-    }
+    * retention spanning a seed + 3 maintenance epochs. A handle holds
+    * no state beyond its arguments (the table lives in its manifest),
+    * so every call may build a fresh one. */
   private[graft] def ivmTable(spark: SparkSession,
-      dir: String): SnapshotTable = ivmTables.synchronized {
-    // memoized per (session OBJECT, dir) so the live-schema cache
-    // survives across the streaming twin's micro-batches WITHOUT
-    // serving a handle pinned to a later-stopped SparkSession to
-    // callers under a new session (r15 advisor — the dir alone used
-    // to key the memo, capturing whichever session arrived first;
-    // the session reference itself keys reference-equal, immune to
-    // the 31-bit identityHashCode collision a stringified hash
-    // would reintroduce, and costs nothing — the stored handle
-    // already retains its session)
-    val key = (spark, dir)
-    val hit = ivmTables.get(key)
-    if (hit != null) hit
-    else {
-      val t = new SnapshotTable(spark, dir, "k", buckets = 4,
-        keepSnapshots = 4)
-      ivmTables.put(key, t)
-      t
-    }
-  }
+      dir: String): SnapshotTable =
+    new SnapshotTable(spark, dir, "k", buckets = 4, keepSnapshots = 4)
 
   private[graft] def ivmWithKey(state: DataFrame): DataFrame =
     state.select(col("st"), col("prio"), col("n_orders"), col("total"),

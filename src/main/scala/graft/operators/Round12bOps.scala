@@ -124,19 +124,9 @@ object Round12bOps {
 
   import graft.sources.SnapshotTable
 
-  // memoized per dir — one instance per table keeps the widening
-  // guard's live-schema cache warm across maintenance commits (see
-  // Round12Ops.ivmTable)
-  private val ivmdTables =
-    scala.collection.concurrent.TrieMap.empty[String, SnapshotTable]
   private[graft] def ivmdTable(spark: SparkSession,
-      dir: String): SnapshotTable = {
-    // bounded like Round12Ops.ivmTables: temp-dir handles must not
-    // accumulate for the JVM's life
-    if (ivmdTables.size > 64) ivmdTables.clear()
-    ivmdTables.getOrElseUpdate(dir,
-      new SnapshotTable(spark, dir, "k", buckets = 4, keepSnapshots = 4))
-  }
+      dir: String): SnapshotTable =
+    new SnapshotTable(spark, dir, "k", buckets = 4, keepSnapshots = 4)
 
   private[graft] def ivmdWithKey(support: DataFrame): DataFrame =
     support.select(col("st"), col("cust"), col("cnt"),

@@ -37,10 +37,9 @@ import graft.functions.{GraftHash, RollingHash64}
   * (the rule's guards make that unreachable). Evaluation semantics
   * follow the matched expression's own `EvalMode`: under ANSI (the
   * Spark 4 default) the loop uses `Math.multiplyExact`/`addExact`, so
-  * overflow raises as ANSI requires (as a plain ArithmeticException,
-  * without Spark's error-class formatting); under LEGACY it wraps
-  * two's-complement like codegen does. TRY mode is excluded by the
-  * matcher.
+  * overflow raises Spark's ARITHMETIC_OVERFLOW error as the row path
+  * does; under LEGACY it wraps two's-complement like codegen does.
+  * TRY mode (`try_add`/`try_multiply`) is excluded by the matcher.
   *
   * Measured honestly (§5 probe, vhash_columnar vs vhash_row, on the
   * round-10 CORRECTED probe input — the ×N replicas are written to
@@ -107,7 +106,7 @@ case class GraftColumnarAffineExec(projectList: Seq[NamedExpression],
           case Alias(e, _) =>
             val (attr, m, c, ansi) = GraftAffineToColumnar.affine(e).get
             val in = batch.column(childOutput.indexWhere(_.exprId == attr.exprId))
-            if (graft.functions.SimdSupport.available && !in.hasNull) {
+            try if (graft.functions.SimdSupport.available && !in.hasNull) {
               // SIMD fast path (jdk.incubator.vector): bulk-copy the
               // scan vector, species-width affine walk, bulk-write.
               // Bit-identical to the scalar loops in both EvalModes —
@@ -130,6 +129,9 @@ case class GraftColumnarAffineExec(projectList: Seq[NamedExpression],
                 else out.putLong(i, in.getLong(i) * m + c)
                 i += 1
               }
+            } catch {
+              case e: ArithmeticException =>
+                throw org.apache.spark.sql.graftshim.Bridge.arithmeticOverflow(e)
             }
         }
         out: ColumnVector
@@ -150,19 +152,22 @@ case class GraftColumnarAffineExec(projectList: Seq[NamedExpression],
 object GraftAffineToColumnar extends Rule[SparkPlan] {
 
   /** Matches `attr * m + c` (and `c + attr * m`) over LongType, with
-    * a consistent non-TRY EvalMode; the returned flag is the ANSI bit
-    * the vector loop must honour. */
+    * one non-TRY eval mode on both operators (Spark 4 carries it in a
+    * `NumericEvalContext`); the returned flag is the ANSI bit the
+    * vector loop must honour. */
   private[plans] def affine(
       e: Expression): Option[(AttributeReference, Long, Long, Boolean)] =
     e match {
       case Add(Multiply(a: AttributeReference, Literal(m: Long, LongType), em1),
           Literal(c: Long, LongType), em2)
-          if a.dataType == LongType && em1 == em2 && em1 != EvalMode.TRY =>
-        Some((a, m, c, em1 == EvalMode.ANSI))
+          if a.dataType == LongType && em1 == em2 &&
+            em1.evalMode != EvalMode.TRY =>
+        Some((a, m, c, em1.evalMode == EvalMode.ANSI))
       case Add(Literal(c: Long, LongType),
           Multiply(a: AttributeReference, Literal(m: Long, LongType), em1), em2)
-          if a.dataType == LongType && em1 == em2 && em1 != EvalMode.TRY =>
-        Some((a, m, c, em1 == EvalMode.ANSI))
+          if a.dataType == LongType && em1 == em2 &&
+            em1.evalMode != EvalMode.TRY =>
+        Some((a, m, c, em1.evalMode == EvalMode.ANSI))
       case _ => None
     }
 

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Snapshot-isolated warehouse TABLE — H18's manifest/time-travel/
   * vacuum contract applied to the A13 parquet sink (the table-format
@@ -32,6 +33,27 @@ import org.apache.spark.sql.functions._
   *     granularity, so a dir shared by five snapshots survives until
   *     the last one expires
   *
+  * Manifest format (`MANIFEST.v<k>` and the `MANIFEST` pointer carry
+  * the same body): one `<bucket> <data dir>` line per live bucket plus
+  * one `schema <StructType json>` line, the table schema of that
+  * snapshot (nullable, without the bucket column; a widening merge
+  * appends the batch's new columns after the prior ones). Every read
+  * passes that schema to the parquet reader, so planning a read opens
+  * no data file and starts no Spark job — the table's metadata lives
+  * in the storage layer, as in Dremel/Iceberg. A manifest with no
+  * schema line (written before the line existed, e.g. under a
+  * persistent store root) is read the old way, with one merged-footer
+  * inference; its next commit writes the line.
+  *
+  * Clustered writes: a commit's rows are rebalanced on the bucket
+  * column and sorted by (bucket, key) before the partitioned write, so
+  * each bucket lands as one file rather than one per write task, a
+  * commit's bytes depend only on its rows, and every row group carries
+  * min/max statistics on the key. At 100 TB the rebalance is the usual
+  * table-format write distribution: AQE splits a skewed bucket at the
+  * advisory partition size and merges small ones, so file sizes stay
+  * bounded either way.
+  *
   * At 100 TB this is exactly a table format's metadata discipline:
   * commits are O(touched data) not O(table), readers are isolated
   * from concurrent rewrites by snapshot pinning, and storage is
@@ -46,25 +68,6 @@ final class SnapshotTable(
     keepSnapshots: Int = 3) {
 
   require(keepSnapshots >= 1, "must retain at least the current snapshot")
-
-  /** Live column set, cached per instance and VALIDATED against the
-    * snapshot version it was computed at: merges are widening-ONLY
-    * (H23), so within one writer the set grows monotonically — seed
-    * it from `create`'s batch (or ONE footer read) and union in each
-    * commit's batch columns. This keeps `requireWidening` off the
-    * per-commit hot path: the r14 guard priced a parquet-footer
-    * Spark job on EVERY merge/stagedMerge, which showed up as the
-    * streaming IVM twins' +20% (a WAP commit per micro-batch → a
-    * footer job per batch). The version tag closes the
-    * MULTI-INSTANCE hole a bare cache would open (r15 review): a
-    * widening committed through a DIFFERENT handle bumps the table
-    * version, so this handle's next guard sees the mismatch and
-    * re-seeds from the newest footer instead of serving a stale
-    * (narrower) live set — which would have let a malformed batch
-    * slip past the H23 guard and null-fill the other writer's
-    * column. The version check is a driver-side directory listing
-    * (no Spark job), so the single-writer fast path stays free. */
-  @volatile private var liveColsCache: Option[(Int, Set[String])] = None
 
   private def manifest: Path = Paths.get(path, "MANIFEST")
 
@@ -85,23 +88,41 @@ final class SnapshotTable(
   /** Current snapshot version (0 = not created). */
   def version: Int = snapshots.lastOption.getOrElse(0)
 
-  private def readRefs(p: Path): Map[Int, String] =
-    Files.readAllLines(p).asScala.filter(_.nonEmpty).map { line =>
+  /** One parsed manifest: bucket → data-dir refs and its schema line.
+    * A manifest written before that line existed has none; its schema
+    * is then inferred once, by merging the data files' footers. */
+  private case class Snap(refs: Map[Int, String], line: Option[StructType]) {
+    lazy val schema: StructType = line.getOrElse(spark.read
+      .option("mergeSchema", "true").parquet(dirsOf(refs): _*).schema)
+  }
+
+  private val SchemaTag = "schema "
+
+  private def readSnap(p: Path): Snap = {
+    val (s, r) = Files.readAllLines(p).asScala.filter(_.nonEmpty)
+      .partition(_.startsWith(SchemaTag))
+    Snap(r.map { line =>
       val Array(b, dir) = line.split(" ", 2)
       b.toInt -> dir
-    }.toMap
+    }.toMap, s.headOption.map(l =>
+      DataType.fromJson(l.drop(SchemaTag.length)).asInstanceOf[StructType]))
+  }
 
-  /** bucket → data-dir refs of the CURRENT snapshot (spec hook). */
-  def refs: Map[Int, String] =
-    if (!Files.exists(manifest)) Map.empty else readRefs(manifest)
+  private def current: Snap =
+    if (!Files.exists(manifest)) Snap(Map.empty, None) else readSnap(manifest)
 
-  /** bucket → data-dir refs as of a retained snapshot. */
-  def refsAsOf(v: Int): Map[Int, String] = {
+  private def snapAsOf(v: Int): Snap = {
     val p = Paths.get(path, s"MANIFEST.v$v")
     require(Files.exists(p),
       s"snapshot v$v of $path is not retained (have: $snapshots)")
-    readRefs(p)
+    readSnap(p)
   }
+
+  /** bucket → data-dir refs of the CURRENT snapshot (spec hook). */
+  def refs: Map[Int, String] = current.refs
+
+  /** bucket → data-dir refs as of a retained snapshot. */
+  def refsAsOf(v: Int): Map[Int, String] = snapAsOf(v).refs
 
   /** Data dirs on disk, relative to `path` (spec hook for vacuum). */
   def dataDirsOnDisk: Set[String] = {
@@ -116,11 +137,13 @@ final class SnapshotTable(
     df.withColumn("__b", pmod(hash(col(keyCol)), lit(buckets)))
 
   /** Write `df`'s per-bucket dirs under `rel` (relative to the table
-    * root); returns the refs produced (only non-empty buckets get a
-    * dir). */
+    * root), clustered (see the class doc); returns the refs produced
+    * (only non-empty buckets get a dir). */
   private def writeDataAt(df: DataFrame, rel: String): Map[Int, String] = {
     val dir = s"$path/$rel"
-    bucketed(df).write.partitionBy("__b").mode("errorifexists").parquet(dir)
+    bucketed(df).hint("rebalance", col("__b"))
+      .sortWithinPartitions(col("__b"), col(keyCol))
+      .write.partitionBy("__b").mode("errorifexists").parquet(dir)
     (0 until buckets).flatMap { b =>
       val d = s"$rel/__b=$b"
       if (Files.exists(Paths.get(path, d))) Some(b -> d) else None
@@ -131,21 +154,12 @@ final class SnapshotTable(
   private def writeData(df: DataFrame, c: Int): Map[Int, String] =
     writeDataAt(df, s"data/c$c")
 
-  /** Returns the version number this commit produced — callers that
-    * tag caches with the commit's version MUST use the returned value
-    * rather than re-reading [[version]] after the fact: another
-    * handle's commit can land in between, and tagging a narrower
-    * column set with the NEWER version would let the next widening
-    * guard serve it without re-seeding (r15 advisor). Residual (also
-    * flagged, not closed here): a table dropped and recreated at the
-    * same path restarts version numbering, so a live handle from the
-    * old incarnation whose cached version collides with the new
-    * table's current version would serve the old live set — dropping
-    * a table out from under live handles is outside the protocol. */
-  private def commitManifest(newRefs: Map[Int, String]): Int = {
+  /** Commit `snap` as the next version: manifest, pointer, expiry,
+    * vacuum. */
+  private def commitManifest(snap: Snap): Unit = {
     val v = version + 1
-    val body = newRefs.toSeq.sortBy(_._1)
-      .map { case (b, d) => s"$b $d" }.mkString("", "\n", "\n")
+    val body = (snap.refs.toSeq.sortBy(_._1).map { case (b, d) => s"$b $d" } :+
+      s"$SchemaTag${snap.schema.json}").mkString("", "\n", "\n")
     // 1. the immutable snapshot, atomically placed
     val tmpV = Paths.get(path, s"MANIFEST.tmp_v${System.nanoTime()}")
     Files.writeString(tmpV, body)
@@ -169,15 +183,13 @@ final class SnapshotTable(
       if (listNames(parent).forall(n => !n.startsWith("__b=")))
         deleteRecursively(parent)
     }
-    v
   }
 
   /** Create the table (errors if it exists). */
   def create(df: DataFrame): Unit = {
     require(version == 0, s"snapshot table $path already exists")
     Files.createDirectories(Paths.get(path))
-    val committed = commitManifest(writeData(df, 1))
-    liveColsCache = Some((committed, df.columns.toSet))
+    commitManifest(Snap(writeData(df, 1), Some(nullable(df.schema))))
   }
 
   /** MERGE (A20b upsert): rows in `updates` replace current rows with
@@ -197,82 +209,57 @@ final class SnapshotTable(
     * update OR delete key rewrite; a bucket whose rows all vanish gets
     * no data dir and drops out of the new manifest. */
   def merge(updates: DataFrame, deletes: Option[DataFrame]): Unit = {
-    val cur = refs
-    require(cur.nonEmpty, s"snapshot table $path not created")
-    requireWidening(cur, updates)
+    val cur = created
+    val schema = widened(cur.schema, updates)
     val (touched, upserted) = upsertPlan(cur, updates, deletes)
-    val c = version + 1
-    val newRefs = writeData(upserted, c)
-    val committed = commitManifest(cur -- touched ++ newRefs)
-    noteCommitted(committed, updates.columns)
+    commitManifest(Snap(cur.refs -- touched ++ writeData(upserted, version + 1),
+      Some(schema)))
   }
 
-  /** H23 is ONE-directional: a merge batch may WIDEN the schema (new
-    * columns null-fill carried rows) but must never narrow it — the
+  /** The current snapshot of a created table. */
+  private def created: Snap = {
+    val cur = current
+    require(cur.refs.nonEmpty, s"snapshot table $path not created")
+    cur
+  }
+
+  /** The schema a merge of `updates` commits (H23): the prior schema,
+    * then the batch's new columns in batch order. Widening is ONE-
+    * directional: a batch missing a live column is refused — the
     * `allowMissingColumns` union below would otherwise silently
-    * null-fill a LIVE column on every upserted key when a malformed
-    * caller ships a batch missing it, destroying data the caller
-    * never meant to touch. Fail fast instead (spec-pinned). Schema
-    * check only, served from the instance cache — at most ONE live
-    * footer read per instance lifetime (see [[liveColsCache]]). */
-  private def requireWidening(cur: Map[Int, String],
-      updates: DataFrame): Unit = {
-    val v = version
-    val live = liveColsCache match {
-      case Some((cv, cols)) if cv == v => cols
-      case _ =>
-        // first guard on a pre-existing table, or the table version
-        // moved under us (a commit through another handle): the
-        // widening-only invariant makes the MOST RECENT commit's dir
-        // carry the widest live schema, so one dir's footer suffices
-        // to (re-)seed the cache
-        val cRe = "data/c(\\d+)/".r
-        val newest = cur.values.maxBy(d =>
-          cRe.findFirstMatchIn(d).map(_.group(1).toInt).getOrElse(-1))
-        val cols = spark.read.parquet(s"$path/$newest").columns.toSet
-        liveColsCache = Some((v, cols))
-        cols
-    }
-    // compare under Spark's resolution semantics (case-insensitive
-    // unless spark.sql.caseSensitive): a batch carrying `ID` against
-    // a live `id` resolves fine in the union, so the guard must not
-    // reject it as missing
+    * null-fill that column on every upserted key, destroying data the
+    * caller never meant to touch (spec-pinned). Names compare under
+    * Spark's resolution rule (case-insensitive unless
+    * spark.sql.caseSensitive): a batch carrying `ID` against a live
+    * `id` resolves fine in the union, so it is neither missing nor
+    * new. The live schema comes from the manifest, so the guard reads
+    * no footer and sees every handle's commits. */
+  private def widened(prior: StructType, updates: DataFrame): StructType = {
     val batch = updates.columns.map(norm).toSet
-    val missing = live.filterNot(c => batch.contains(norm(c)))
+    val missing = prior.fieldNames.filterNot(c => batch.contains(norm(c)))
     require(missing.isEmpty,
       s"snapshot table $path: update batch is missing live column(s) " +
         s"${missing.mkString(", ")} — merges are widening-only (H23); " +
         "a narrower batch would null-fill those columns on every " +
         "upserted key")
+    val have = prior.fieldNames.map(norm).toSet
+    nullable(StructType(prior ++
+      updates.schema.filterNot(f => have.contains(norm(f.name)))))
   }
+
+  private def nullable(s: StructType): StructType =
+    StructType(s.map(_.copy(nullable = true)))
 
   private def norm(c: String): String =
     if (spark.conf.get("spark.sql.caseSensitive", "false").toBoolean) c
     else c.toLowerCase(java.util.Locale.ROOT)
-
-  /** Fold a committed batch's columns into the live-set cache — the
-    * monotone update that keeps the cache exact without any footer
-    * read (a widening-checked batch's columns ⊇ the prior live set,
-    * so post-commit live = batch ∪ prior spellings), tagged with the
-    * version OUR commit just produced so the next guard's version
-    * check passes on the single-writer fast path. `committedV` is the
-    * version [[commitManifest]] RETURNED for this handle's own commit
-    * — never a re-read of [[version]], which another handle's
-    * interleaved widening commit could have bumped past ours, mis-
-    * tagging this (narrower) column set as current (r15 advisor). */
-  private def noteCommitted(committedV: Int, batchCols: Seq[String]): Unit = {
-    val live = liveColsCache.map(_._2).getOrElse(Set.empty[String])
-    val have = live.map(norm)
-    liveColsCache = Some((committedV,
-      live ++ batchCols.filterNot(c => have.contains(norm(c)))))
-  }
 
   /** The MERGE read plan against a given snapshot: the touched-bucket
     * set (metadata-sized, ≤ `buckets` ints, derived from the update +
     * delete batch alone — the standing table is not scanned for it)
     * and the upserted relation over ONLY the touched buckets' standing
     * data. */
-  private def upsertPlan(cur: Map[Int, String], updates: DataFrame,
+  private def upsertPlan(cur: Snap, updates: DataFrame,
       deletes: Option[DataFrame],
       batchKeysHint: Option[DataFrame] = None): (Set[Int], DataFrame) = {
     // no `.distinct()` anywhere in this derivation (r19 optimization):
@@ -293,23 +280,19 @@ final class SnapshotTable(
     }
     val touched = bucketed(batchKeys).select(col("__b"))
       .collect().map(_.getInt(0)).toSet
-    val standing = touched.toSeq.sorted.flatMap(cur.get) match {
-      case Nil => None
-      case dirs => Some(spark.read.parquet(
-        dirs.map(d => s"$path/$d"): _*))
-    }
-    val upserted = standing match {
-      case Some(s) =>
+    val standing = cur.refs.filter { case (b, _) => touched(b) }
+    val upserted =
+      if (standing.isEmpty) updates
+      else
         // allowMissingColumns = schema evolution (H23): an update
         // batch may carry NEW columns — carried standing rows null-
         // fill them, and untouched buckets' files stay as-is (the
-        // merged-schema read reconciles, the A30 discipline applied
-        // to the table format)
+        // manifest-schema read null-fills them, the A30 discipline
+        // applied to the table format)
         updates.unionByName(
-          s.join(batchKeys, Seq(keyCol), "left_anti"),
+          readSnapDf(Snap(standing, Some(cur.schema)))
+            .join(batchKeys, Seq(keyCol), "left_anti"),
           allowMissingColumns = true)
-      case None => updates
-    }
     (touched, upserted)
   }
 
@@ -349,25 +332,23 @@ final class SnapshotTable(
     * optimization). */
   def stageMerge(updates: DataFrame, deletes: Option[DataFrame],
       batchKeysHint: Option[DataFrame]): StagedMerge = {
-    val cur = refs
-    require(cur.nonEmpty, s"snapshot table $path not created")
-    requireWidening(cur, updates)
+    val cur = created
+    val schema = widened(cur.schema, updates)
     val base = version
     val (touched, upserted) = upsertPlan(cur, updates, deletes,
       batchKeysHint)
     val rel = s"staged/s${System.nanoTime()}"
     val stagedRefs = writeDataAt(upserted, rel)
-    new StagedMerge(base, cur, touched, rel, stagedRefs, updates.columns)
+    new StagedMerge(base, cur.refs -- touched, rel, stagedRefs, schema)
   }
 
   /** A staged, unpublished MERGE — see [[stageMerge]]. */
   final class StagedMerge private[SnapshotTable] (
       baseVersion: Int,
-      baseRefs: Map[Int, String],
-      touched: Set[Int],
+      carried: Map[Int, String],
       stagedRel: String,
       stagedRefs: Map[Int, String],
-      batchCols: Seq[String]) {
+      schema: StructType) {
 
     private var consumed = false
     private def requireLive(): Unit =
@@ -377,7 +358,7 @@ final class SnapshotTable(
       * from the staged dirs) — the audit surface. */
     def read(): DataFrame = {
       requireLive()
-      readRefsDf(baseRefs -- touched ++ stagedRefs)
+      readSnapDf(Snap(carried ++ stagedRefs, Some(schema)))
     }
 
     /** Atomically promote the staged write to the current snapshot.
@@ -399,8 +380,7 @@ final class SnapshotTable(
         b -> d.replaceFirst(java.util.regex.Pattern.quote(stagedRel),
           s"data/c$c")
       }
-      val committed = commitManifest(baseRefs -- touched ++ moved)
-      noteCommitted(committed, batchCols)
+      commitManifest(Snap(carried ++ moved, Some(schema)))
       consumed = true
     }
 
@@ -416,35 +396,34 @@ final class SnapshotTable(
     * (the data is byte-identical relationally); retained snapshots
     * keep reading the pre-compaction files until they expire. */
   def compact(): Unit = {
-    val cur = refs
-    require(cur.nonEmpty, s"snapshot table $path not created")
-    // the merged-schema read (readRefsDf), NOT a plain parquet read:
-    // after a widening merge (H23) the live refs mix pre- and
-    // post-widening files, and a plain read would infer the narrow
-    // schema from an arbitrary footer and silently DROP the widened
-    // column's values in the rewrite (caught by WarehouseSpec's
-    // post-compaction pin)
-    commitManifest(writeData(readRefsDf(cur), version + 1))
+    val cur = created
+    // the manifest-schema read, NOT a plain parquet read: after a
+    // widening merge (H23) the live refs mix pre- and post-widening
+    // files, and a plain read would infer the narrow schema from an
+    // arbitrary footer and silently DROP the widened column's values
+    // in the rewrite (caught by WarehouseSpec's post-compaction pin)
+    commitManifest(Snap(writeData(readSnapDf(cur), version + 1),
+      Some(cur.schema)))
   }
 
   /** The current table. */
-  def read(): DataFrame = readRefsDf(refs)
+  def read(): DataFrame = readSnapDf(current)
 
   /** Time travel: the table as of a RETAINED snapshot — bit-stable
     * under any later merge/compaction while retained (spec-pinned);
     * raises once the snapshot has expired. */
-  def readAsOf(v: Int): DataFrame = readRefsDf(refsAsOf(v))
+  def readAsOf(v: Int): DataFrame = readSnapDf(snapAsOf(v))
 
-  private def readRefsDf(r: Map[Int, String]): DataFrame = {
-    require(r.nonEmpty, s"snapshot table $path has no data")
-    // mergeSchema: a snapshot may reference data dirs written before
-    // AND after a schema-widening merge (H23) — the read reconciles
-    // by name, null-filling the new columns for pre-widening files;
-    // a snapshot written entirely before the widening keeps its old
-    // schema (its refs never include widened files)
-    spark.read.option("mergeSchema", "true")
-      .parquet(r.values.toSeq.map(d => s"$path/$d"): _*)
+  /** `snap`'s rows under its schema: pre-widening files null-fill the
+    * columns they lack (H23), and a snapshot written entirely before
+    * a widening keeps its old schema. */
+  private def readSnapDf(snap: Snap): DataFrame = {
+    require(snap.refs.nonEmpty, s"snapshot table $path has no data")
+    spark.read.schema(snap.schema).parquet(dirsOf(snap.refs): _*)
   }
+
+  private def dirsOf(r: Map[Int, String]): Seq[String] =
+    r.values.toSeq.map(d => s"$path/$d")
 
   /** Drop everything (test cleanup). */
   def drop(): Unit = deleteRecursively(Paths.get(path))

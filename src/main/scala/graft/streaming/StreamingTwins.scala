@@ -1219,12 +1219,8 @@ object StreamingTwins {
       .agg(coalesce(sum(col("n_orders")), lit(0L))).first().getLong(0)
     val q = src.writeStream.outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // one WAP-gated maintenance commit per micro-batch; the
-        // handle is memoized per dir (r15: it carries the live-schema
-        // cache across batches), so every batch reuses the instance
-        // bound to the OUTER session — fine in this single-JVM
-        // harness, where micro-batch sessions are clones sharing the
-        // session state the handle reads (conf + parquet reads)
+        // one WAP-gated maintenance commit per micro-batch, through
+        // a handle on the micro-batch's session
         runningTotal = Round12Ops.ivmSnapshotStep(
           Round12Ops.ivmTable(batch.sparkSession, tableDir), batch,
           Some(runningTotal))

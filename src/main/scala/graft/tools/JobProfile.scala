@@ -12,10 +12,11 @@ import graft.Harness
 
 /** Per-row job/stage profile: attach a listener, run the row the
   * bench's way (Harness.run), and report where the wall went — JVM GC
-  * time, SERIAL JOB COUNT, per-job wall, the DRIVER GAPS between jobs
-  * (scheduler round-trips, plan analysis, broadcast builds), and the
-  * stages whose task count is far below the slot count (row-starved
-  * CPU-bound kernels). Build rows rebuild cold on every rep.
+  * time, SERIAL JOB COUNT, task count, per-job wall, the DRIVER GAPS
+  * between jobs (scheduler round-trips, plan analysis, broadcast
+  * builds), and the stages whose task count is far below the slot
+  * count (row-starved CPU-bound kernels). Build rows rebuild cold on
+  * every rep.
   *
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.JobProfile q_item_cf 3"
   *   sbt "runMain graft.tools.JobProfile gbt_model_build 2"   # cold builds
@@ -27,6 +28,7 @@ object JobProfile {
     val jobs = mutable.ArrayBuffer.empty[Job]
     val smallStages = mutable.ArrayBuffer.empty[(Int, Int, Double)]
     val stageNames = mutable.ArrayBuffer.empty[String]
+    var tasks = 0
     var enabled = false
     override def onJobStart(e: SparkListenerJobStart): Unit =
       if (enabled) synchronized {
@@ -43,6 +45,7 @@ object JobProfile {
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       if (enabled) synchronized {
         val s = e.stageInfo
+        tasks += s.numTasks
         val wall = (s.completionTime.getOrElse(0L) -
           s.submissionTime.getOrElse(0L)) / 1e3
         if (wall > 0.3 && s.numTasks <= 8)
@@ -52,7 +55,7 @@ object JobProfile {
             s.name.take(70)
       }
     def reset(): Unit = synchronized {
-      jobs.clear(); smallStages.clear(); stageNames.clear()
+      jobs.clear(); smallStages.clear(); stageNames.clear(); tasks = 0
     }
     def report(wall: Double): String = synchronized {
       val done = jobs.filter(_.t1 > 0).sortBy(_.t0)
@@ -68,7 +71,7 @@ object JobProfile {
       val small = smallStages.sortBy(-_._3).take(5).map {
         case (id, n, w) => f"stage$id:${n}t/$w%.2fs"
       }.mkString(" ")
-      f"wall=$wall%.2f jobs=${done.size} jobWall=$jobWall%.2f " +
+      f"wall=$wall%.2f jobs=${done.size} tasks=$tasks jobWall=$jobWall%.2f " +
         f"gaps=$gaps%.2f | top: $top | smallStages: $small\n  slow: " +
         stageNames.mkString("\n  slow: ")
     }

@@ -24,6 +24,12 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Spark's ANSI ARITHMETIC_OVERFLOW error for an overflow caught
+    * outside generated code (the error factory is private[sql]). */
+  def arithmeticOverflow(e: ArithmeticException): ArithmeticException =
+    org.apache.spark.sql.errors.QueryExecutionErrors
+      .arithmeticOverflowError(e.getMessage)
+
   /** The analyzed logical plan behind a DataFrame. */
   def planOf(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

@@ -211,6 +211,53 @@ class ExtensionsSpec extends SparkSuite {
         case g: GraftColumnarAffineExec => g }.isEmpty)
   }
 
+  test("H16: the affine lane follows the expression's eval mode — an ANSI overflow raises the row path's error class; try_add/try_multiply stay on the row path and return null") {
+    import graft.plans.GraftColumnarAffineExec
+    import org.apache.spark.SparkThrowable
+    val dir = java.nio.file.Files.createTempDirectory("graft_affine_mode")
+      .resolve("t").toString
+    // x * 3 + 7 overflows a long for every row
+    extSpark.range(0, 8).select((col("id") + Long.MaxValue / 2).as("x"))
+      .write.parquet(dir)
+    def columnar(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.executedPlan.collect {
+        case g: GraftColumnarAffineExec => g }.nonEmpty
+    // the error class of the first ArithmeticException behind a failed
+    // collect ("none" if it succeeded, "plain" if it carries none)
+    def overflowClass(df: org.apache.spark.sql.DataFrame): String =
+      try { df.collect(); "none" }
+      catch {
+        case e: Throwable =>
+          Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+            .collectFirst { case a: ArithmeticException => a } match {
+            case Some(t: SparkThrowable) => String.valueOf(t.getCondition)
+            case Some(_) => "plain"
+            case None => throw e
+          }
+      }
+    val key = "spark.sql.ansi.enabled"
+    val before = extSpark.conf.getOption(key)
+    try {
+      extSpark.conf.set(key, "true")
+      val x = extSpark.read.parquet(dir)
+      val lane = x.select((col("x") * 3L + 7L).as("graft_vscore"))
+      val row = x.select((col("x") * 3L + 7L).as("vscore"))
+      assert(columnar(lane) && !columnar(row))
+      val rowClass = overflowClass(row)
+      assert(rowClass == "ARITHMETIC_OVERFLOW", rowClass)
+      assert(overflowClass(lane) == rowClass,
+        "the columnar lane must fail an ANSI overflow like the row path")
+      // TRY semantics are the row path's: the rule leaves them alone
+      val tried = x.select(try_add(try_multiply(col("x"), lit(3L)), lit(7L))
+        .as("graft_vscore"))
+      assert(!columnar(tried), tried.queryExecution.executedPlan.toString)
+      assert(tried.collect().forall(_.isNullAt(0)))
+    } finally before match {
+      case Some(v) => extSpark.conf.set(key, v)
+      case None => extSpark.conf.unset(key)
+    }
+  }
+
   test("H16: vectorized string-hash lane computes the rolling hash batch-wise, bit-equal to the codegen row path") {
     import graft.plans.GraftColumnarAffineExec
     val docs = Tables.documents(extSpark, sf)

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.operators.{DedupMore, DedupOps, WarehouseOps}
@@ -566,18 +568,16 @@ class WarehouseSpec extends SparkSuite {
       }
       assert(errMixed.getMessage.contains("missing live column(s) extra —"),
         s"case-varied spellings misreported: ${errMixed.getMessage}")
-      // a FRESH handle on the existing table seeds its live-schema
-      // cache from one footer read and enforces the same guard (the
-      // instance cache is an optimization, never a semantics change)
+      // a FRESH handle on the existing table reads the live schema
+      // from the manifest and enforces the same guard
       val t2 = new SnapshotTable(spark, s"$root/t", "id",
         buckets = 4, keepSnapshots = 3)
       val errFresh = intercept[IllegalArgumentException] { t2.merge(narrow) }
       assert(errFresh.getMessage.contains("widening-only"))
-      // a STALE handle must not serve its cache across ANOTHER
-      // handle's widening (r15 review): t2's cache is warm from the
-      // guard above; widen through t, then a t2 batch missing the
-      // new column must still be rejected — the cache is tagged with
-      // the snapshot version, so the moved table forces a re-seed
+      // an OLDER handle must see ANOTHER handle's widening: widen
+      // through t, then a t2 batch missing the new column must still
+      // be rejected — the guard reads the live schema from the
+      // current manifest on every merge; no handle keeps a copy
       t.merge(Seq((4L, 40L, "x4", "w4"))
         .toDF("id", "v", "extra", "extra2"))
       val errStale = intercept[IllegalArgumentException] {
@@ -586,6 +586,145 @@ class WarehouseSpec extends SparkSuite {
       assert(errStale.getMessage.contains("extra2"),
         s"stale handle served a pre-widening cache: ${errStale.getMessage}")
     } finally t.drop()
+  }
+
+  /** `body`'s result and the Spark jobs it started on this thread:
+    * the jobs run under a fresh job group, then a fence job in a second
+    * group marks the end of their events on the listener bus. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"graft_jobs_${System.nanoTime()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .map(p => String.valueOf(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains(s"$group-fence") && System.nanoTime() < deadline)
+        Thread.sleep(5)
+      assert(seen.contains(s"$group-fence"), "fence job never reported")
+      (out, seen.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("snapshot table manifest schema: reads after create, merge, staged publish and compaction start no job before their action, their schema equals a merged-footer read, and every commit writes one file per bucket") {
+    import spark.implicits._
+    import graft.sources.SnapshotTable
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_snap_schema").toString
+    val t = new SnapshotTable(spark, s"$root/t", "id",
+      buckets = 4, keepSnapshots = 5)
+    def fields(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType).toSet
+    // the read plans with no job, and its schema is the one a
+    // merged-footer read of the same dirs infers
+    def planned(read: => org.apache.spark.sql.DataFrame,
+        refs: Map[Int, String]): org.apache.spark.sql.DataFrame = {
+      val (df, jobs) = withJobCount(read)
+      assert(jobs == 0, s"planning the read started $jobs job(s)")
+      val inferred = spark.read.option("mergeSchema", "true")
+        .parquet(refs.values.toSeq.map(d => s"$root/t/$d"): _*)
+      assert(fields(df) == fields(inferred))
+      df
+    }
+    def parquetFiles(dir: String): Int = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(s"$root/t/$dir"))
+      try s.iterator().asScala.count(_.toString.endsWith(".parquet"))
+      finally s.close()
+    }
+    try {
+      // several write tasks per commit, so a per-task write would
+      // leave several files in a bucket dir
+      t.create((1L to 40L).map(i => (i, s"n$i", i * 10L))
+        .toDF("id", "name", "v").repartition(4))
+      assert(planned(t.read(), t.refs).count() == 40)
+      // a widening merge: the new column follows the prior ones
+      t.merge(Seq((1L, "u1", 111L, "x1"), (41L, "n41", 410L, "x41"))
+        .toDF("id", "name", "v", "extra").repartition(2))
+      assert(planned(t.read(), t.refs).columns.toSeq ==
+        Seq("id", "name", "v", "extra"))
+      assert(planned(t.readAsOf(1), t.refsAsOf(1)).columns.toSeq ==
+        Seq("id", "name", "v"))
+      val staged = t.stageMerge(Seq((2L, "u2", 222L, "x2"))
+        .toDF("id", "name", "v", "extra"))
+      val (audit, auditJobs) = withJobCount(staged.read())
+      assert(auditJobs == 0 && audit.count() == 41)
+      staged.publish()
+      assert(planned(t.read(), t.refs).count() == 41)
+      t.compact()
+      val cur = planned(t.read(), t.refs)
+      assert(cur.columns.toSeq == Seq("id", "name", "v", "extra"))
+      assert(cur.filter($"extra".isNotNull).count() == 3)
+      assert(planned(t.readAsOf(2), t.refsAsOf(2)).count() == 41)
+      val dirs = t.snapshots.flatMap(v => t.refsAsOf(v).values).distinct
+      assert(dirs.nonEmpty)
+      dirs.foreach(d => assert(parquetFiles(d) == 1, s"$d: not one file"))
+    } finally t.drop()
+  }
+
+  test("snapshot table manifest schema: one handle's guard sees another handle's widening without a footer read; a manifest with no schema line still reads and merges") {
+    import spark.implicits._
+    import graft.sources.SnapshotTable
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_snap_handles").toString
+    val a = new SnapshotTable(spark, s"$root/t", "id",
+      buckets = 4, keepSnapshots = 3)
+    val b = new SnapshotTable(spark, s"$root/t", "id",
+      buckets = 4, keepSnapshots = 3)
+    def byId(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, String)] =
+      df.select("id", "v", "extra").collect().map(r => r.getLong(0) ->
+        ((r.getLong(1), if (r.isNullAt(2)) null else r.getString(2)))).toMap
+    try {
+      a.create((1L to 20L).map(i => (i, i * 10L)).toDF("id", "v"))
+      a.merge(Seq((1L, 11L)).toDF("id", "v"))
+      b.merge(Seq((2L, 22L, "x2")).toDF("id", "v", "extra"))
+      // a's guard rejects a batch without b's new column, reading no
+      // data file to find out
+      val (err, jobs) = withJobCount(intercept[IllegalArgumentException] {
+        a.merge(Seq((3L, 33L)).toDF("id", "v"))
+      })
+      assert(jobs == 0, s"the guard started $jobs job(s)")
+      assert(err.getMessage.contains("missing live column(s) extra —"))
+      a.merge(Seq((3L, 33L, "x3")).toDF("id", "v", "extra"))
+      assert(byId(b.read())(3L) == ((33L, "x3")))
+
+      // strip the schema line, as a manifest written before it existed
+      val dir = java.nio.file.Paths.get(s"$root/t")
+      val manifests = {
+        val s = java.nio.file.Files.list(dir)
+        try s.iterator().asScala.toSeq finally s.close()
+      }.filter(_.getFileName.toString.startsWith("MANIFEST"))
+      manifests.foreach { m =>
+        val lines = java.nio.file.Files.readAllLines(m).asScala
+        assert(lines.exists(_.startsWith("schema ")), s"$m has no schema line")
+        java.nio.file.Files.write(m,
+          lines.filterNot(_.startsWith("schema ")).asJava)
+      }
+      val old = new SnapshotTable(spark, s"$root/t", "id",
+        buckets = 4, keepSnapshots = 3)
+      val rows = byId(old.read())
+      assert(rows.size == 20 && rows(2L) == ((22L, "x2")) &&
+        rows(4L) == ((40L, null)))
+      intercept[IllegalArgumentException] {
+        old.merge(Seq((4L, 44L)).toDF("id", "v"))
+      }
+      old.merge(Seq((4L, 44L, "x4"), (21L, 210L, "x21"))
+        .toDF("id", "v", "extra"))
+      assert(byId(a.read()) ==
+        rows + (4L -> ((44L, "x4"))) + (21L -> ((210L, "x21"))))
+      assert(java.nio.file.Files.readAllLines(dir.resolve("MANIFEST"))
+        .asScala.exists(_.startsWith("schema ")),
+        "the first commit on an old manifest must write the schema line")
+    } finally a.drop()
   }
 
   test("ModelStore torn-state recovery (round 15): a writer crash between the gbt pair's publishes leaves a half-complete key — the next access rebuilds ONLY the missing artifact, keeps the published one untouched, and serves bit-identical content") {
