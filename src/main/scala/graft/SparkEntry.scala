@@ -6,13 +6,19 @@ import graft.operators._
 import graft.plans.{AsOf, AsOfExec, RangeJoin}
 import graft.streaming.StreamingTwins
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
+/** One query: its plan builder over `(spark, sfDir)` and the ANSI SQL
+  * DuckDB runs on the same parquet tables, whose result `tools/check.py`
+  * hash-compares with the plan's. Column names/aliases are identical on
+  * both sides (columns are sorted by name before hashing). */
+final case class QueryDef(name: String, plan: Harness.Plan, oracle: String)
+
+/** The query surface — see SURVEY.md §2 for the inventory.
   *
-  * Each operator module contributes a `queries` map (name → plan
-  * builder over `(spark, sfDir)`) and, where the semantics are
-  * ANSI-SQL-expressible, a matching `oracleSql` DuckDB query the driver
-  * hash-compares against. Column names/aliases are kept identical on
-  * both sides (the driver sorts columns by name before hashing).
+  * Each operator module declares its queries once, as a
+  * `defs: Seq[QueryDef]` placed after every `…Sql` val it reads (a
+  * `val defs` above one would capture a null oracle). Adding a query is
+  * one `QueryDef` line in its module; `queries` and `oracleSql` are
+  * derived from the one `registry`, so their key sets cannot drift.
   */
 object SparkEntry {
 
@@ -20,16 +26,32 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Analytics.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Analytics.queries ++ EtlOps.queries ++ TextOps.queries ++
-      DedupOps.queries ++ AnnOps.queries ++ MultimodalOps.queries ++
-      ExtendedAnalytics.queries ++ AsOf.queries ++ SketchOps.queries ++ RangeJoin.queries ++ ClusterOps.queries ++ TypedOps.queries ++ TpchMore.queries ++ AsOfExec.queries ++ StreamingTwins.queries ++ PipelineOps.queries ++ RelationalMore.queries ++ DedupMore.queries ++ TpchFinal.queries ++ StatsOps.queries ++ WarehouseOps.queries ++ RetrievalOps.queries ++ Round9Ops.queries ++ Round9bOps.queries ++ Round10Ops.queries ++ Round10bOps.queries ++ Round12Ops.queries ++ Round12bOps.queries ++ Round13Ops.queries ++ Round15Ops.queries ++ Round16Ops.queries ++ Round17Ops.queries ++ Round18Ops.queries ++ Round19Ops.queries
+  /** Every module's `defs`, checked once at first access: names are
+    * unique and every oracle is set. */
+  private val registry: Seq[QueryDef] = {
+    val defs = Seq(Analytics.defs, EtlOps.defs, TextOps.defs, DedupOps.defs,
+      AnnOps.defs, MultimodalOps.defs, ExtendedAnalytics.defs, AsOf.defs,
+      SketchOps.defs, RangeJoin.defs, ClusterOps.defs, TypedOps.defs,
+      TpchMore.defs, AsOfExec.defs, StreamingTwins.defs, PipelineOps.defs,
+      RelationalMore.defs, DedupMore.defs, TpchFinal.defs, StatsOps.defs,
+      WarehouseOps.defs, RetrievalOps.defs, Round9Ops.defs, Round9bOps.defs,
+      Round10Ops.defs, Round10bOps.defs, Round12Ops.defs, Round12bOps.defs,
+      Round13Ops.defs, Round15Ops.defs, Round16Ops.defs, Round17Ops.defs,
+      Round18Ops.defs, Round19Ops.defs).flatten
+    val dups = defs.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(dups.isEmpty,
+      s"query names declared twice: ${dups.toSeq.sorted.mkString(", ")}")
+    defs.foreach(d => require(d.oracle != null && d.oracle.trim.nonEmpty,
+      s"query ${d.name}: null or empty oracle (is its module's `defs` " +
+        "declared above the oracle's val?)"))
+    defs
+  }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys → driver rows-only check. */
-  def oracleSql: Map[String, String] =
-    Analytics.oracleSql ++ EtlOps.oracleSql ++ TextOps.oracleSql ++
-      DedupOps.oracleSql ++ AnnOps.oracleSql ++ MultimodalOps.oracleSql ++
-      ExtendedAnalytics.oracleSql ++ AsOf.oracleSql ++ SketchOps.oracleSql ++ RangeJoin.oracleSql ++ ClusterOps.oracleSql ++ TypedOps.oracleSql ++ TpchMore.oracleSql ++ AsOfExec.oracleSql ++ StreamingTwins.oracleSql ++ PipelineOps.oracleSql ++ RelationalMore.oracleSql ++ DedupMore.oracleSql ++ TpchFinal.oracleSql ++ StatsOps.oracleSql ++ WarehouseOps.oracleSql ++ RetrievalOps.oracleSql ++ Round9Ops.oracleSql ++ Round9bOps.oracleSql ++ Round10Ops.oracleSql ++ Round10bOps.oracleSql ++ Round12Ops.oracleSql ++ Round12bOps.oracleSql ++ Round13Ops.oracleSql ++ Round15Ops.oracleSql ++ Round16Ops.oracleSql ++ Round17Ops.oracleSql ++ Round18Ops.oracleSql ++ Round19Ops.oracleSql
+  /** Every query's plan builder, by name. */
+  val queries: Map[String, Harness.Plan] =
+    registry.map(d => d.name -> d.plan).toMap
+
+  /** Every query's DuckDB oracle, by name. */
+  val oracleSql: Map[String, String] =
+    registry.map(d => d.name -> d.oracle).toMap
 }

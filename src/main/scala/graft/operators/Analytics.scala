@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.Tables
 
 /** Relational analytics surface (SURVEY.md §2.B).
@@ -473,39 +474,21 @@ object Analytics {
       |  COUNT(*) AS n_lines
       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q6_forecast_revenue" -> q6ForecastRevenue _,
-    "q12_ship_priority" -> q12ShipPriority _,
-    "q14_promo_revenue" -> q14PromoRevenue _,
-    "q19_discounted_revenue" -> q19DiscountedRevenue _,
-    "q1_pricing_summary" -> q1PricingSummary _,
-    "q3_shipping_priority" -> q3ShippingPriority _,
-    "q5_local_supplier" -> q5LocalSupplier _,
-    "q_top_customers" -> qTopCustomers _,
-    "q_window_running" -> qWindowRunning _,
-    "q_rollup" -> qRollup _,
-    "q_events_window" -> qEventsWindow _,
-    "q_events_sessionize" -> qEventsSessionize _,
-    "q_topk_per_group" -> qTopkPerGroup _,
-    "q_semi_anti" -> qSemiAnti _,
-    "q_skew_salted" -> qSkewSalted _
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q6_forecast_revenue" -> q6ForecastRevenueSql,
-    "q12_ship_priority" -> q12ShipPrioritySql,
-    "q14_promo_revenue" -> q14PromoRevenueSql,
-    "q19_discounted_revenue" -> q19DiscountedRevenueSql,
-    "q1_pricing_summary" -> q1PricingSummarySql,
-    "q3_shipping_priority" -> q3ShippingPrioritySql,
-    "q5_local_supplier" -> q5LocalSupplierSql,
-    "q_top_customers" -> qTopCustomersSql,
-    "q_window_running" -> qWindowRunningSql,
-    "q_rollup" -> qRollupSql,
-    "q_events_window" -> qEventsWindowSql,
-    "q_events_sessionize" -> qEventsSessionizeSql,
-    "q_topk_per_group" -> qTopkPerGroupSql,
-    "q_semi_anti" -> qSemiAntiSql,
-    "q_skew_salted" -> qSkewSaltedSql
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q6_forecast_revenue", q6ForecastRevenue, q6ForecastRevenueSql),
+    QueryDef("q12_ship_priority", q12ShipPriority, q12ShipPrioritySql),
+    QueryDef("q14_promo_revenue", q14PromoRevenue, q14PromoRevenueSql),
+    QueryDef("q19_discounted_revenue", q19DiscountedRevenue,
+      q19DiscountedRevenueSql),
+    QueryDef("q1_pricing_summary", q1PricingSummary, q1PricingSummarySql),
+    QueryDef("q3_shipping_priority", q3ShippingPriority, q3ShippingPrioritySql),
+    QueryDef("q5_local_supplier", q5LocalSupplier, q5LocalSupplierSql),
+    QueryDef("q_top_customers", qTopCustomers, qTopCustomersSql),
+    QueryDef("q_window_running", qWindowRunning, qWindowRunningSql),
+    QueryDef("q_rollup", qRollup, qRollupSql),
+    QueryDef("q_events_window", qEventsWindow, qEventsWindowSql),
+    QueryDef("q_events_sessionize", qEventsSessionize, qEventsSessionizeSql),
+    QueryDef("q_topk_per_group", qTopkPerGroup, qTopkPerGroupSql),
+    QueryDef("q_semi_anti", qSemiAnti, qSemiAntiSql),
+    QueryDef("q_skew_salted", qSkewSalted, qSkewSaltedSql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.storage.StorageLevel
 
+import graft.QueryDef
 import graft.Tables
 import graft.functions.gf
 
@@ -51,9 +52,9 @@ object AnnOps {
 
   def annBruteforce(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val queries = emb.filter(col("vec_id") < 10)
+    val queryVecs = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    bruteForceTopK(emb, queries, 5)
+    bruteForceTopK(emb, queryVecs, 5)
       .select(col("qid"), col("rank"), col("nid"), col("sim"))
   }
 
@@ -110,9 +111,9 @@ object AnnOps {
 
   def annLsh(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val queries = emb.filter(col("vec_id") < 10)
+    val queryVecs = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    lshTopK(emb, queries, 5)
+    lshTopK(emb, queryVecs, 5)
       .select(col("qid"), col("rank"), col("nid"), col("sim"))
   }
 
@@ -210,9 +211,9 @@ object AnnOps {
 
   def annIvf(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val queries = emb.filter(col("vec_id") < 10)
+    val queryVecs = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    ivfTopK(emb, queries, 5, nprobe = 3)
+    ivfTopK(emb, queryVecs, 5, nprobe = 3)
       .select(col("qid"), col("rank"), col("nid"), col("sim"))
   }
 
@@ -1593,10 +1594,10 @@ object AnnOps {
         .select(col("cell"), col("vec_id"), col("embedding")))
       s
     })
-    val queries = emb.filter(col("vec_id") < 10)
+    val queryVecs = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val qw = Window.partitionBy(col("qid")).orderBy(col("qdist2"), col("cell"))
-    val probeCells = queries.crossJoin(broadcast(cents))
+    val probeCells = queryVecs.crossJoin(broadcast(cents))
       .withColumn("qdist2",
         gf.l2sq_long(quantize(col("qv")), col("centroid_q")))
       .withColumn("qrn", row_number().over(qw))
@@ -1822,11 +1823,11 @@ object AnnOps {
     * E1, which this extends. */
   def annFiltered(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.embeddings(spark, sfDir)
-    val queries = emb.filter(col("vec_id") < 10)
+    val queryVecs = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
         col("label").as("qlabel"))
     val pairs = emb
-      .join(broadcast(queries), col("vec_id") =!= col("qid"))
+      .join(broadcast(queryVecs), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nid"),
         when(col("label") === col("qlabel"), 1L).otherwise(0L).as("matched"),
         round(gf.cosine_sim(col("qv"), col("embedding")), 6).as("sim"))
@@ -1892,9 +1893,9 @@ object AnnOps {
   def annMmr(spark: SparkSession, sfDir: String): DataFrame = {
     val lam = 0.7
     val emb = Tables.embeddings(spark, sfDir)
-    val queries = emb.filter(col("vec_id") < 10)
+    val queryVecs = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val cands = bruteForceTopK(emb, queries, 12)
+    val cands = bruteForceTopK(emb, queryVecs, 12)
       .join(emb.select(col("vec_id").as("nid"), col("embedding").as("nv")),
         "nid")
       .select(col("qid"), col("nid"), col("sim"), col("nv"))
@@ -2618,49 +2619,26 @@ object AnnOps {
       |    - n_old * 1000000 // t_old) > 20000 AS drifted
       |FROM j CROSS JOIN t""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_centroid_drift" -> annCentroidDrift _,
-    "knn_graph" -> knnGraphShared _,
-    "emb_semdedup_sweep" -> embSemdedupSweep _,
-    "emb_semdedup" -> embSemdedup _,
-    "emb_dim_ablation" -> embDimAblation _,
-    "ann_mmr" -> annMmr _,
-    "ann_filtered" -> annFiltered _,
-    "emb_power_iteration" -> embPowerIteration _,
-    "ann_ivf_segmented" -> annIvfSegmented _,
-    "emb_dim_corr" -> embDimCorr _,
-    "emb_incremental_encode" -> embIncrementalEncode _,
-    "ann_residual_sweep" -> annResidualSweep _,
-    "ann_bruteforce" -> annBruteforce _,
-    "ann_lsh" -> annLsh _,
-    "ann_ivf" -> annIvf _,
-    "emb_kmeans" -> embKmeans _,
-    "ann_pq" -> annPq _,
-    "ann_ivf_pq" -> annIvfPq _,
-    "ann_ivfpq_residual" -> annIvfPqResidual _,
-    "ann_ivfpq_sweep" -> annIvfPqSweep _
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "ann_centroid_drift" -> annCentroidDriftSql,
-    "knn_graph" -> knnGraphSql,
-    "emb_semdedup_sweep" -> embSemdedupSweepSql,
-    "emb_semdedup" -> embSemdedupSql,
-    "emb_dim_ablation" -> embDimAblationSql,
-    "ann_mmr" -> annMmrSql,
-    "ann_filtered" -> annFilteredSql,
-    "emb_power_iteration" -> embPowerIterationSql,
-    "ann_ivf_segmented" -> annIvfSegmentedSql,
-    "emb_dim_corr" -> embDimCorrSql,
-    "emb_incremental_encode" -> embIncrementalEncodeSql,
-    "ann_residual_sweep" -> annResidualSweepSql,
-    "ann_bruteforce" -> annBruteforceSql,
-    "ann_lsh" -> annLshSql,
-    "ann_ivf" -> annIvfSql,
-    "emb_kmeans" -> embKmeansSql,
-    "ann_pq" -> annPqSql,
-    "ann_ivf_pq" -> annIvfPqSql,
-    "ann_ivfpq_residual" -> annIvfPqResidualSql,
-    "ann_ivfpq_sweep" -> annIvfPqSweepSql
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("ann_centroid_drift", annCentroidDrift, annCentroidDriftSql),
+    QueryDef("knn_graph", knnGraphShared, knnGraphSql),
+    QueryDef("emb_semdedup_sweep", embSemdedupSweep, embSemdedupSweepSql),
+    QueryDef("emb_semdedup", embSemdedup, embSemdedupSql),
+    QueryDef("emb_dim_ablation", embDimAblation, embDimAblationSql),
+    QueryDef("ann_mmr", annMmr, annMmrSql),
+    QueryDef("ann_filtered", annFiltered, annFilteredSql),
+    QueryDef("emb_power_iteration", embPowerIteration, embPowerIterationSql),
+    QueryDef("ann_ivf_segmented", annIvfSegmented, annIvfSegmentedSql),
+    QueryDef("emb_dim_corr", embDimCorr, embDimCorrSql),
+    QueryDef("emb_incremental_encode", embIncrementalEncode,
+      embIncrementalEncodeSql),
+    QueryDef("ann_residual_sweep", annResidualSweep, annResidualSweepSql),
+    QueryDef("ann_bruteforce", annBruteforce, annBruteforceSql),
+    QueryDef("ann_lsh", annLsh, annLshSql),
+    QueryDef("ann_ivf", annIvf, annIvfSql),
+    QueryDef("emb_kmeans", embKmeans, embKmeansSql),
+    QueryDef("ann_pq", annPq, annPqSql),
+    QueryDef("ann_ivf_pq", annIvfPq, annIvfPqSql),
+    QueryDef("ann_ivfpq_residual", annIvfPqResidual, annIvfPqResidualSql),
+    QueryDef("ann_ivfpq_sweep", annIvfPqSweep, annIvfPqSweepSql))
 }

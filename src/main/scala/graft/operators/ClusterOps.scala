@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables
 
 /** Duplicate-cluster formation: connected components over the
@@ -194,13 +195,6 @@ object ClusterOps {
         when(col("doc_id") === col("canonical_id"), "Y").otherwise("N"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_cluster_profile" -> dedupClusterProfile _,
-    "dedup_clusters" -> dedupClusters _,
-    "dedup_canonical" -> dedupCanonical _,
-    "dedup_canonical_quality" -> dedupCanonicalQuality _
-  )
-
   /** Shared oracle CTE chain: replay the portable MinHash pair
     * pipeline, then take the transitive closure with a recursive CTE
     * and label each node with its component minimum — exactly what the
@@ -317,10 +311,11 @@ object ClusterOps {
        |  CAST((k - 1) * n_clusters AS BIGINT) AS dup_excess
        |FROM allk, nc ORDER BY k""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "dedup_cluster_profile" -> dedupClusterProfileSql,
-    "dedup_clusters" -> dedupClustersSql,
-    "dedup_canonical" -> dedupCanonicalSql,
-    "dedup_canonical_quality" -> dedupCanonicalQualitySql
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("dedup_cluster_profile", dedupClusterProfile,
+      dedupClusterProfileSql),
+    QueryDef("dedup_clusters", dedupClusters, dedupClustersSql),
+    QueryDef("dedup_canonical", dedupCanonical, dedupCanonicalSql),
+    QueryDef("dedup_canonical_quality", dedupCanonicalQuality,
+      dedupCanonicalQualitySql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables
 import graft.functions.gf
 
@@ -967,36 +968,21 @@ object DedupMore {
       |FROM ranked WHERE rn = 1 AND score >= 5000
       |ORDER BY c_custkey""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_linkage" -> dedupLinkage _,
-    "dedup_pagerank" -> dedupPagerank _,
-    "dedup_edit_verify" -> dedupEditVerify _,
-    "ann_hamming" -> annHamming _,
-    "dedup_triangles" -> dedupTriangles _,
-    "dedup_span_coverage" -> dedupSpanCoverage _,
-    "dedup_lsh_calibration" -> dedupLshCalibration _,
-    "source_overlap" -> sourceOverlap _,
-    "dedup_graph_degree" -> dedupGraphDegree _,
-    "text_tfidf" -> textTfidf _,
-    "dedup_containment" -> ((s: SparkSession, d: String) =>
-      DedupOps.sharedContainment(s, d)),
-    "dedup_incremental" -> dedupIncremental _,
-    "ann_rerank" -> annRerank _,
-    "text_novelty" -> textNovelty _)
-
-  def oracleSql: Map[String, String] = Map(
-    "dedup_linkage" -> dedupLinkageSql,
-    "dedup_pagerank" -> dedupPagerankSql,
-    "dedup_edit_verify" -> dedupEditVerifySql,
-    "ann_hamming" -> annHammingSql,
-    "dedup_triangles" -> dedupTrianglesSql,
-    "dedup_span_coverage" -> dedupSpanCoverageSql,
-    "dedup_lsh_calibration" -> dedupLshCalibrationSql,
-    "source_overlap" -> sourceOverlapSql,
-    "dedup_graph_degree" -> dedupGraphDegreeSql,
-    "text_tfidf" -> textTfidfSql,
-    "dedup_containment" -> dedupContainmentSql,
-    "dedup_incremental" -> dedupIncrementalSql,
-    "ann_rerank" -> annRerankSql,
-    "text_novelty" -> textNoveltySql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("dedup_linkage", dedupLinkage, dedupLinkageSql),
+    QueryDef("dedup_pagerank", dedupPagerank, dedupPagerankSql),
+    QueryDef("dedup_edit_verify", dedupEditVerify, dedupEditVerifySql),
+    QueryDef("ann_hamming", annHamming, annHammingSql),
+    QueryDef("dedup_triangles", dedupTriangles, dedupTrianglesSql),
+    QueryDef("dedup_span_coverage", dedupSpanCoverage, dedupSpanCoverageSql),
+    QueryDef("dedup_lsh_calibration", dedupLshCalibration,
+      dedupLshCalibrationSql),
+    QueryDef("source_overlap", sourceOverlap, sourceOverlapSql),
+    QueryDef("dedup_graph_degree", dedupGraphDegree, dedupGraphDegreeSql),
+    QueryDef("text_tfidf", textTfidf, textTfidfSql),
+    QueryDef("dedup_containment", DedupOps.sharedContainment,
+      dedupContainmentSql),
+    QueryDef("dedup_incremental", dedupIncremental, dedupIncrementalSql),
+    QueryDef("ann_rerank", annRerank, annRerankSql),
+    QueryDef("text_novelty", textNovelty, textNoveltySql))
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables
 import graft.functions.gf
 
@@ -484,19 +485,10 @@ object DedupOps {
        |JOIN sizes s2 ON s2.doc_id = i.id2
        |WHERE CAST(i.i AS DOUBLE) / (s1.n + s2.n - i.i) >= 0.5""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_exact" -> dedupExact _,
-    "dedup_minhash_lsh" -> dedupMinhashLsh _,
-    "dedup_simhash" -> dedupSimhash _,
-    "dedup_ngram_jaccard" -> dedupNgramJaccard _,
-    "dedup_embedding" -> dedupEmbedding _
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "dedup_exact" -> dedupExactSql,
-    "dedup_embedding" -> dedupEmbeddingSql,
-    "dedup_minhash_lsh" -> dedupMinhashLshSql,
-    "dedup_simhash" -> dedupSimhashSql,
-    "dedup_ngram_jaccard" -> dedupNgramJaccardSql
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("dedup_exact", dedupExact, dedupExactSql),
+    QueryDef("dedup_minhash_lsh", dedupMinhashLsh, dedupMinhashLshSql),
+    QueryDef("dedup_simhash", dedupSimhash, dedupSimhashSql),
+    QueryDef("dedup_ngram_jaccard", dedupNgramJaccard, dedupNgramJaccardSql),
+    QueryDef("dedup_embedding", dedupEmbedding, dedupEmbeddingSql))
 }

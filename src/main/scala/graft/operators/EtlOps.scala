@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.QueryDef
 import graft.Tables
 
 /** ETL core (SURVEY.md §2.A) — the reference pipeline's own data
@@ -790,45 +791,24 @@ object EtlOps {
       |FROM piv ORDER BY col_name""".stripMargin
 
   // ----------------------------------------------------------------
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "etl_schema_drift" -> etlSchemaDrift _,
-    "etl_type_infer" -> etlTypeInfer _,
-    "etl_profile" -> etlProfile _,
-    "etl_pipeline_composite" -> etlPipelineComposite _,
-    "etl_scd2_history" -> etlScd2History _,
-    "etl_attribution" -> etlAttribution _,
-    "etl_enrich" -> etlEnrich _,
-    "etl_normalize_cols" -> etlNormalizeCols _,
-    "etl_filename_ts" -> etlFilenameTs _,
-    "etl_change_missing" -> etlChangeMissing _,
-    "etl_change_mismatch" -> etlChangeMismatch _,
-    "etl_change_combined" -> etlChangeCombined _,
-    "etl_scd_current" -> etlScdCurrent _,
-    "etl_log_summary" -> etlLogSummary _,
-    "etl_merge_union" -> etlMergeUnion _,
-    "etl_dedup_key" -> etlDedupKey _,
-    "etl_validate" -> etlValidate _,
-    "etl_retry_ledger" -> etlRetryLedger _
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "etl_schema_drift" -> etlSchemaDriftSql,
-    "etl_type_infer" -> etlTypeInferSql,
-    "etl_profile" -> etlProfileSql,
-    "etl_pipeline_composite" -> etlPipelineCompositeSql,
-    "etl_scd2_history" -> etlScd2HistorySql,
-    "etl_attribution" -> etlAttributionSql,
-    "etl_enrich" -> etlEnrichSql,
-    "etl_normalize_cols" -> etlNormalizeColsSql,
-    "etl_filename_ts" -> etlFilenameTsSql,
-    "etl_change_missing" -> etlChangeMissingSql,
-    "etl_change_mismatch" -> etlChangeMismatchSql,
-    "etl_change_combined" -> etlChangeCombinedSql,
-    "etl_scd_current" -> etlScdCurrentSql,
-    "etl_log_summary" -> etlLogSummarySql,
-    "etl_merge_union" -> etlMergeUnionSql,
-    "etl_dedup_key" -> etlDedupKeySql,
-    "etl_validate" -> etlValidateSql,
-    "etl_retry_ledger" -> etlRetryLedgerSql
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("etl_schema_drift", etlSchemaDrift, etlSchemaDriftSql),
+    QueryDef("etl_type_infer", etlTypeInfer, etlTypeInferSql),
+    QueryDef("etl_profile", etlProfile, etlProfileSql),
+    QueryDef("etl_pipeline_composite", etlPipelineComposite,
+      etlPipelineCompositeSql),
+    QueryDef("etl_scd2_history", etlScd2History, etlScd2HistorySql),
+    QueryDef("etl_attribution", etlAttribution, etlAttributionSql),
+    QueryDef("etl_enrich", etlEnrich, etlEnrichSql),
+    QueryDef("etl_normalize_cols", etlNormalizeCols, etlNormalizeColsSql),
+    QueryDef("etl_filename_ts", etlFilenameTs, etlFilenameTsSql),
+    QueryDef("etl_change_missing", etlChangeMissing, etlChangeMissingSql),
+    QueryDef("etl_change_mismatch", etlChangeMismatch, etlChangeMismatchSql),
+    QueryDef("etl_change_combined", etlChangeCombined, etlChangeCombinedSql),
+    QueryDef("etl_scd_current", etlScdCurrent, etlScdCurrentSql),
+    QueryDef("etl_log_summary", etlLogSummary, etlLogSummarySql),
+    QueryDef("etl_merge_union", etlMergeUnion, etlMergeUnionSql),
+    QueryDef("etl_dedup_key", etlDedupKey, etlDedupKeySql),
+    QueryDef("etl_validate", etlValidate, etlValidateSql),
+    QueryDef("etl_retry_ledger", etlRetryLedger, etlRetryLedgerSql))
 }

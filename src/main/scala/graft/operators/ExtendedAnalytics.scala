@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.Tables
 
 /** Second analytics wave: reshaping (pivot/cube), interval-range
@@ -488,39 +489,20 @@ object ExtendedAnalytics {
       |      ORDER BY p_retailprice DESC, p_partkey) AS price_rank
       |  FROM part) WHERE price_rank <= 3""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_topk_agg" -> qTopkAgg _,
-    "q_events_funnel" -> qEventsFunnel _,
-    "q_funnel_windowed" -> qFunnelWindowed _,
-    "q_percentiles" -> qPercentiles _,
-    "q_grouping_sets" -> qGroupingSets _,
-    "q_small_quantity" -> qSmallQuantity _,
-    "q_string_surface" -> qStringSurface _,
-    "q_ntile" -> qNtile _,
-    "q_pivot" -> qPivot _,
-    "q_cube" -> qCube _,
-    "q_range_window" -> qRangeWindow _,
-    "q_json_extract" -> qJsonExtract _,
-    "q_date_funcs" -> qDateFuncs _,
-    "q_arg_extremes" -> qArgExtremes _,
-    "q_set_ops" -> qSetOps _
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_topk_agg" -> qTopkAggSql,
-    "q_events_funnel" -> qEventsFunnelSql,
-    "q_funnel_windowed" -> qFunnelWindowedSql,
-    "q_percentiles" -> qPercentilesSql,
-    "q_grouping_sets" -> qGroupingSetsSql,
-    "q_small_quantity" -> qSmallQuantitySql,
-    "q_string_surface" -> qStringSurfaceSql,
-    "q_ntile" -> qNtileSql,
-    "q_pivot" -> qPivotSql,
-    "q_cube" -> qCubeSql,
-    "q_range_window" -> qRangeWindowSql,
-    "q_json_extract" -> qJsonExtractSql,
-    "q_date_funcs" -> qDateFuncsSql,
-    "q_arg_extremes" -> qArgExtremesSql,
-    "q_set_ops" -> qSetOpsSql
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q_topk_agg", qTopkAgg, qTopkAggSql),
+    QueryDef("q_events_funnel", qEventsFunnel, qEventsFunnelSql),
+    QueryDef("q_funnel_windowed", qFunnelWindowed, qFunnelWindowedSql),
+    QueryDef("q_percentiles", qPercentiles, qPercentilesSql),
+    QueryDef("q_grouping_sets", qGroupingSets, qGroupingSetsSql),
+    QueryDef("q_small_quantity", qSmallQuantity, qSmallQuantitySql),
+    QueryDef("q_string_surface", qStringSurface, qStringSurfaceSql),
+    QueryDef("q_ntile", qNtile, qNtileSql),
+    QueryDef("q_pivot", qPivot, qPivotSql),
+    QueryDef("q_cube", qCube, qCubeSql),
+    QueryDef("q_range_window", qRangeWindow, qRangeWindowSql),
+    QueryDef("q_json_extract", qJsonExtract, qJsonExtractSql),
+    QueryDef("q_date_funcs", qDateFuncs, qDateFuncsSql),
+    QueryDef("q_arg_extremes", qArgExtremes, qArgExtremesSql),
+    QueryDef("q_set_ops", qSetOps, qSetOpsSql))
 }

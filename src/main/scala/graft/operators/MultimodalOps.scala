@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables
 
 /** Multimodal column plumbing (SURVEY.md §2.F).
@@ -379,21 +380,11 @@ object MultimodalOps {
       |  FROM sized s JOIN mad ON s.modality = mad.modality)
       |SELECT * FROM scored WHERE abs(robust_z) > 3.5""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_size_anomaly" -> mmSizeAnomaly _,
-    "mm_byte_entropy" -> mmByteEntropy _,
-    "mm_meta" -> mmMeta _,
-    "mm_frame_sample" -> mmFrameSample _,
-    "mm_phash_dedup" -> mmPhashDedup _,
-    "mm_modality_mix" -> mmModalityMix _
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "mm_size_anomaly" -> mmSizeAnomalySql,
-    "mm_byte_entropy" -> mmByteEntropySql,
-    "mm_meta" -> mmMetaSql,
-    "mm_frame_sample" -> mmFrameSampleSql,
-    "mm_phash_dedup" -> mmPhashDedupSql,
-    "mm_modality_mix" -> mmModalityMixSql
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("mm_size_anomaly", mmSizeAnomaly, mmSizeAnomalySql),
+    QueryDef("mm_byte_entropy", mmByteEntropy, mmByteEntropySql),
+    QueryDef("mm_meta", mmMeta, mmMetaSql),
+    QueryDef("mm_frame_sample", mmFrameSample, mmFrameSampleSql),
+    QueryDef("mm_phash_dedup", mmPhashDedup, mmPhashDedupSql),
+    QueryDef("mm_modality_mix", mmModalityMix, mmModalityMixSql))
 }

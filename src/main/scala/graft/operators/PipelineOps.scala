@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables
 import graft.functions.gf
 
@@ -471,21 +472,6 @@ object PipelineOps {
       |FROM corpus JOIN copies USING (fp)
       |GROUP BY source""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sample_group_split" -> sampleGroupSplit _,
-    "sample_dedup_weight" -> sampleDedupWeight _,
-    "corpus_report" -> corpusReport _,
-    "sample_temperature" -> sampleTemperature _,
-    "sample_weighted" -> sampleWeighted _,
-    "text_vocab_oov" -> textVocabOov _,
-    "mix_rebalance" -> mixRebalance _,
-    "sample_split" -> sampleSplit _,
-    "sample_stratified" -> sampleStratified _,
-    "pack_sequences" -> packSequences _,
-    "contamination_check" -> contamination _,
-    "emb_quantize" -> embQuantize _,
-    "sample_quality_mix" -> sampleQualityMix _)
-
   // ---------------------------------------------------------------- J14
   /** Leakage-free (group-aware) split — the fix for J1's quiet flaw:
     * J1 splits DOCUMENTS, so two verbatim copies of the same text can
@@ -586,18 +572,18 @@ object PipelineOps {
       |    % 1000000 < decile * 100000 THEN 'Y' ELSE 'N' END AS keep_flag
       |FROM ranked""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "sample_group_split" -> sampleGroupSplitSql,
-    "sample_dedup_weight" -> sampleDedupWeightSql,
-    "corpus_report" -> corpusReportSql,
-    "sample_temperature" -> sampleTemperatureSql,
-    "sample_weighted" -> sampleWeightedSql,
-    "text_vocab_oov" -> textVocabOovSql,
-    "mix_rebalance" -> mixRebalanceSql,
-    "sample_split" -> sampleSplitSql,
-    "sample_stratified" -> sampleStratifiedSql,
-    "pack_sequences" -> packSequencesSql,
-    "contamination_check" -> contaminationSql,
-    "emb_quantize" -> embQuantizeSql,
-    "sample_quality_mix" -> sampleQualityMixSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("sample_group_split", sampleGroupSplit, sampleGroupSplitSql),
+    QueryDef("sample_dedup_weight", sampleDedupWeight, sampleDedupWeightSql),
+    QueryDef("corpus_report", corpusReport, corpusReportSql),
+    QueryDef("sample_temperature", sampleTemperature, sampleTemperatureSql),
+    QueryDef("sample_weighted", sampleWeighted, sampleWeightedSql),
+    QueryDef("text_vocab_oov", textVocabOov, textVocabOovSql),
+    QueryDef("mix_rebalance", mixRebalance, mixRebalanceSql),
+    QueryDef("sample_split", sampleSplit, sampleSplitSql),
+    QueryDef("sample_stratified", sampleStratified, sampleStratifiedSql),
+    QueryDef("pack_sequences", packSequences, packSequencesSql),
+    QueryDef("contamination_check", contamination, contaminationSql),
+    QueryDef("emb_quantize", embQuantize, embQuantizeSql),
+    QueryDef("sample_quality_mix", sampleQualityMix, sampleQualityMixSql))
 }

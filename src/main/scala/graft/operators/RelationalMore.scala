@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.Tables
 
 /** Round-6 relational additions (SURVEY.md §2.B43-B45, A20).
@@ -349,23 +350,13 @@ object RelationalMore {
       |    / ((sxx - sx * sx / n) * (syy - sy * sy / n)), 6) AS r2
       |FROM s""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_linreg" -> qLinreg _,
-    "q21_late_supplier" -> q21LateSupplier _,
-    "q_stats_moments" -> qStatsMoments _,
-    "q_hopping_window" -> qHoppingWindow _,
-    "etl_merge_upsert" -> etlMergeUpsert _,
-    "q4_order_priority" -> q4OrderPriority _,
-    "q_percent_rank" -> qPercentRank _,
-    "etl_quarantine" -> etlQuarantine _)
-
-  def oracleSql: Map[String, String] = Map(
-    "q_linreg" -> qLinregSql,
-    "q21_late_supplier" -> q21LateSupplierSql,
-    "q_stats_moments" -> qStatsMomentsSql,
-    "q_hopping_window" -> qHoppingWindowSql,
-    "etl_merge_upsert" -> etlMergeUpsertSql,
-    "q4_order_priority" -> q4OrderPrioritySql,
-    "q_percent_rank" -> qPercentRankSql,
-    "etl_quarantine" -> etlQuarantineSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q_linreg", qLinreg, qLinregSql),
+    QueryDef("q21_late_supplier", q21LateSupplier, q21LateSupplierSql),
+    QueryDef("q_stats_moments", qStatsMoments, qStatsMomentsSql),
+    QueryDef("q_hopping_window", qHoppingWindow, qHoppingWindowSql),
+    QueryDef("etl_merge_upsert", etlMergeUpsert, etlMergeUpsertSql),
+    QueryDef("q4_order_priority", q4OrderPriority, q4OrderPrioritySql),
+    QueryDef("q_percent_rank", qPercentRank, qPercentRankSql),
+    QueryDef("etl_quarantine", etlQuarantine, etlQuarantineSql))
 }

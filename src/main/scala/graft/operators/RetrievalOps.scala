@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.QueryDef
 import graft.Tables
 import graft.functions.TopKAgg
 
@@ -233,15 +234,9 @@ object RetrievalOps {
     probeQueries.toDF("query_id", "tok")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_bm25" -> textBm25 _,
-    "bm25_standing" -> bm25Standing _
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_bm25" -> textBm25Sql,
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("text_bm25", textBm25, textBm25Sql),
     // segmentation-blind: the standing-index lifecycle must reproduce
     // the rebuild-from-text result bit-for-bit (refresh ≡ rebuild)
-    "bm25_standing" -> textBm25Sql
-  )
+    QueryDef("bm25_standing", bm25Standing, textBm25Sql))
 }

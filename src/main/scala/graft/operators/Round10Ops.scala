@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.QueryDef
 import graft.Tables
 
 /** Round-10 widening (SURVEY.md §2): exact-substring span EXTENTS
@@ -182,7 +183,7 @@ object Round10Ops {
     val edges = g.unionByName(
         g.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val queries = emb.filter(col("vec_id") < 10)
+    val queryVecs = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val ep = emb.select(col("vec_id").as("nid"),
         graft.functions.gf.h32(concat(lit("gseed:"), col("vec_id"))).as("h"))
@@ -190,11 +191,11 @@ object Round10Ops {
     def score(cands: DataFrame): DataFrame =
       broadcast(cands)
         .join(emb.withColumnRenamed("vec_id", "nid"), "nid")
-        .join(broadcast(queries), "qid")
+        .join(broadcast(queryVecs), "qid")
         .select(col("qid"), col("nid"),
           round(graft.functions.gf.cosine_sim(col("qv"), col("embedding")), 6)
             .as("sim"))
-    var visited = score(queries.select(col("qid")).crossJoin(broadcast(ep)))
+    var visited = score(queryVecs.select(col("qid")).crossJoin(broadcast(ep)))
       .localCheckpoint(true)
     val beam = Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("nid"))
@@ -282,7 +283,7 @@ object Round10Ops {
     val edges = g.unionByName(
         g.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    val queries = emb.filter(col("vec_id") < 10)
+    val queryVecs = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val ep = emb.select(col("vec_id").as("nid"),
         graft.functions.gf.h32(concat(lit("gseed:"), col("vec_id"))).as("h"))
@@ -292,12 +293,12 @@ object Round10Ops {
     def score(cands: DataFrame): DataFrame =
       broadcast(cands)
         .join(emb.withColumnRenamed("vec_id", "nid"), "nid")
-        .join(broadcast(queries), "qid")
+        .join(broadcast(queryVecs), "qid")
         .select(col("beam"), col("qid"), col("nid"),
           round(graft.functions.gf.cosine_sim(col("qv"), col("embedding")), 6)
             .as("sim"))
     var visited = score(broadcast(beams)
-        .crossJoin(queries.select(col("qid")))
+        .crossJoin(queryVecs.select(col("qid")))
         .crossJoin(broadcast(ep)))
       .localCheckpoint(true)
     val w = Window.partitionBy(col("beam"), col("qid"))
@@ -316,7 +317,7 @@ object Round10Ops {
     val got5 = visited.filter(col("nid") =!= col("qid"))
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
       .select(col("beam"), col("qid"), col("nid"))
-    val exact5 = queries
+    val exact5 = queryVecs
       .crossJoin(emb.withColumnRenamed("vec_id", "nid"))
       .filter(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
@@ -992,25 +993,15 @@ object Round10Ops {
       |  CAST(min(tw) AS BIGINT) AS total_weight
       |FROM c GROUP BY l_returnflag""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_substr_spans" -> dedupSubstrSpans _,
-    "ann_graph_search" -> annGraphSearch _,
-    "ann_graph_sweep" -> annGraphSweep _,
-    "text_bpe_train" -> textBpeTrain _,
-    "text_bpe_encode" -> textBpeEncode _,
-    "text_bpe_sweep" -> textBpeSweep _,
-    "text_kn_lm" -> textKnLm _,
-    "q_markov_attribution" -> qMarkovAttribution _,
-    "q_weighted_percentiles" -> qWeightedPercentiles _)
-
-  def oracleSql: Map[String, String] = Map(
-    "dedup_substr_spans" -> dedupSubstrSpansSql,
-    "ann_graph_search" -> annGraphSearchSql,
-    "ann_graph_sweep" -> annGraphSweepSql,
-    "text_bpe_train" -> textBpeTrainSql,
-    "text_bpe_encode" -> textBpeEncodeSql,
-    "text_bpe_sweep" -> textBpeSweepSql,
-    "text_kn_lm" -> textKnLmSql,
-    "q_markov_attribution" -> qMarkovAttributionSql,
-    "q_weighted_percentiles" -> qWeightedPercentilesSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("dedup_substr_spans", dedupSubstrSpans, dedupSubstrSpansSql),
+    QueryDef("ann_graph_search", annGraphSearch, annGraphSearchSql),
+    QueryDef("ann_graph_sweep", annGraphSweep, annGraphSweepSql),
+    QueryDef("text_bpe_train", textBpeTrain, textBpeTrainSql),
+    QueryDef("text_bpe_encode", textBpeEncode, textBpeEncodeSql),
+    QueryDef("text_bpe_sweep", textBpeSweep, textBpeSweepSql),
+    QueryDef("text_kn_lm", textKnLm, textKnLmSql),
+    QueryDef("q_markov_attribution", qMarkovAttribution, qMarkovAttributionSql),
+    QueryDef("q_weighted_percentiles", qWeightedPercentiles,
+      qWeightedPercentilesSql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.QueryDef
 import graft.Tables
 
 /** Round-10 second widening (SURVEY.md §2): the graph-distance and
@@ -1354,37 +1355,21 @@ object Round10bOps {
       |    * 1000000 // greatest(2 * pp * nn, 1) AS auc_ppm
       |FROM rcl""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "phrase_standing" -> phraseStanding _,
-    "graph_weighted_paths" -> graphWeightedPaths _,
-    "graph_clustering_coeff" -> graphClusteringCoeff _,
-    "q_roc_auc" -> qRocAuc _,
-    "mix_epoch_caps" -> mixEpochCaps _,
-    "q_seq_patterns" -> qSeqPatterns _,
-    "q_tree_depth2" -> qTreeDepth2 _,
-    "graph_hits" -> graphHits _,
-    "graph_shortest_paths" -> graphShortestPaths _,
-    "graph_label_prop" -> graphLabelProp _,
-    "q_assoc_rules" -> qAssocRules _,
-    "q_gini_split" -> qGiniSplit _,
-    "text_phrase_search" -> textPhraseSearch _,
-    "etl_fd_discovery" -> etlFdDiscovery _,
-    "q_item_cf" -> qItemCf _)
-
-  def oracleSql: Map[String, String] = Map(
-    "phrase_standing" -> textPhraseSearchSql,
-    "graph_weighted_paths" -> graphWeightedPathsSql,
-    "graph_clustering_coeff" -> graphClusteringCoeffSql,
-    "q_roc_auc" -> qRocAucSql,
-    "mix_epoch_caps" -> mixEpochCapsSql,
-    "q_seq_patterns" -> qSeqPatternsSql,
-    "q_tree_depth2" -> qTreeDepth2Sql,
-    "graph_hits" -> graphHitsSql,
-    "graph_shortest_paths" -> graphShortestPathsSql,
-    "graph_label_prop" -> graphLabelPropSql,
-    "q_assoc_rules" -> qAssocRulesSql,
-    "q_gini_split" -> qGiniSplitSql,
-    "text_phrase_search" -> textPhraseSearchSql,
-    "etl_fd_discovery" -> etlFdDiscoverySql,
-    "q_item_cf" -> qItemCfSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("phrase_standing", phraseStanding, textPhraseSearchSql),
+    QueryDef("graph_weighted_paths", graphWeightedPaths, graphWeightedPathsSql),
+    QueryDef("graph_clustering_coeff", graphClusteringCoeff,
+      graphClusteringCoeffSql),
+    QueryDef("q_roc_auc", qRocAuc, qRocAucSql),
+    QueryDef("mix_epoch_caps", mixEpochCaps, mixEpochCapsSql),
+    QueryDef("q_seq_patterns", qSeqPatterns, qSeqPatternsSql),
+    QueryDef("q_tree_depth2", qTreeDepth2, qTreeDepth2Sql),
+    QueryDef("graph_hits", graphHits, graphHitsSql),
+    QueryDef("graph_shortest_paths", graphShortestPaths, graphShortestPathsSql),
+    QueryDef("graph_label_prop", graphLabelProp, graphLabelPropSql),
+    QueryDef("q_assoc_rules", qAssocRules, qAssocRulesSql),
+    QueryDef("q_gini_split", qGiniSplit, qGiniSplitSql),
+    QueryDef("text_phrase_search", textPhraseSearch, textPhraseSearchSql),
+    QueryDef("etl_fd_discovery", etlFdDiscovery, etlFdDiscoverySql),
+    QueryDef("q_item_cf", qItemCf, qItemCfSql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.Tables
 
 /** Round-12 surface (SURVEY.md §2 rows A33, B89): incremental view
@@ -956,17 +957,10 @@ object Round12Ops {
     s"WITH $gbtCtes\n$out"
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_gbt_stumps" -> qGbtStumps _,
-    "warehouse_ivm" -> warehouseIvm _,
-    "warehouse_ivm_join" -> warehouseIvmJoin _,
-    "q_tree_depthk" -> qTreeDepthK _,
-    "q_forest" -> qForest _)
-
-  val oracleSql: Map[String, String] = Map(
-    "q_gbt_stumps" -> qGbtStumpsSql,
-    "warehouse_ivm" -> warehouseIvmSql,
-    "warehouse_ivm_join" -> warehouseIvmJoinSql,
-    "q_tree_depthk" -> qTreeDepthKSql,
-    "q_forest" -> qForestSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q_gbt_stumps", qGbtStumps, qGbtStumpsSql),
+    QueryDef("warehouse_ivm", warehouseIvm, warehouseIvmSql),
+    QueryDef("warehouse_ivm_join", warehouseIvmJoin, warehouseIvmJoinSql),
+    QueryDef("q_tree_depthk", qTreeDepthK, qTreeDepthKSql),
+    QueryDef("q_forest", qForest, qForestSql))
 }

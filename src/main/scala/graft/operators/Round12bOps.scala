@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.Tables
 
 /** Round-12 closing surface (SURVEY.md §2 rows A35, B92): incremental
@@ -574,17 +575,12 @@ object Round12bOps {
        |lab AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a)
        |SELECT doc_id, cluster_id FROM lab""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "warehouse_ivm_distinct" -> warehouseIvmDistinct _,
-    "knn_graph_incremental" -> knnGraphIncremental _,
-    "dedup_cc_incremental" -> dedupCcIncremental _,
-    "dedup_cc_decremental" -> dedupCcDecremental _,
-    "q_linreg2" -> qLinreg2 _)
-
-  def oracleSql: Map[String, String] = Map(
-    "warehouse_ivm_distinct" -> warehouseIvmDistinctSql,
-    "knn_graph_incremental" -> knnGraphIncrementalSql,
-    "dedup_cc_incremental" -> dedupCcIncrementalSql,
-    "dedup_cc_decremental" -> dedupCcDecrementalSql,
-    "q_linreg2" -> qLinreg2Sql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("warehouse_ivm_distinct", warehouseIvmDistinct,
+      warehouseIvmDistinctSql),
+    QueryDef("knn_graph_incremental", knnGraphIncremental,
+      knnGraphIncrementalSql),
+    QueryDef("dedup_cc_incremental", dedupCcIncremental, dedupCcIncrementalSql),
+    QueryDef("dedup_cc_decremental", dedupCcDecremental, dedupCcDecrementalSql),
+    QueryDef("q_linreg2", qLinreg2, qLinreg2Sql))
 }

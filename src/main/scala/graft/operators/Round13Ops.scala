@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables
 
 /** Round-13 surface (SURVEY.md §2 rows B93, B94): the EVALUATION leg
@@ -1662,37 +1663,22 @@ object Round13Ops {
        |FROM lca GROUP BY train_folds""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sample_learning_curve" -> sampleLearningCurve _,
-    "q_cv_auc" -> qCvAuc _,
-    "q_confusion" -> qConfusion _,
-    "q_gbt_eval" -> qGbtEval _,
-    "q_forest_eval" -> qForestEval _,
-    "q_pr_curve" -> qPrCurve _,
-    "q_calibration" -> qCalibration _,
-    "sample_holdout_eval" -> sampleHoldoutEval _,
-    "q_feature_importance" -> qFeatureImportance _,
-    "q_gbt_importance" -> qGbtImportance _,
-    "q_model_compare" -> qModelCompare _,
-    "q_cost_curve" -> qCostCurve _,
-    "q_isotonic_calibration" -> qIsotonicCalibration _,
-    "sample_slice_eval" -> sampleSliceEval _,
-    "q_oob_eval" -> qOobEval _)
-
-  val oracleSql: Map[String, String] = Map(
-    "sample_learning_curve" -> sampleLearningCurveSql,
-    "q_cv_auc" -> qCvAucSql,
-    "q_confusion" -> qConfusionSql,
-    "q_gbt_eval" -> qGbtEvalSql,
-    "q_forest_eval" -> qForestEvalSql,
-    "q_pr_curve" -> qPrCurveSql,
-    "q_calibration" -> qCalibrationSql,
-    "sample_holdout_eval" -> sampleHoldoutEvalSql,
-    "q_feature_importance" -> qFeatureImportanceSql,
-    "q_gbt_importance" -> qGbtImportanceSql,
-    "q_model_compare" -> qModelCompareSql,
-    "q_cost_curve" -> qCostCurveSql,
-    "q_isotonic_calibration" -> qIsotonicCalibrationSql,
-    "sample_slice_eval" -> sampleSliceEvalSql,
-    "q_oob_eval" -> qOobEvalSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("sample_learning_curve", sampleLearningCurve,
+      sampleLearningCurveSql),
+    QueryDef("q_cv_auc", qCvAuc, qCvAucSql),
+    QueryDef("q_confusion", qConfusion, qConfusionSql),
+    QueryDef("q_gbt_eval", qGbtEval, qGbtEvalSql),
+    QueryDef("q_forest_eval", qForestEval, qForestEvalSql),
+    QueryDef("q_pr_curve", qPrCurve, qPrCurveSql),
+    QueryDef("q_calibration", qCalibration, qCalibrationSql),
+    QueryDef("sample_holdout_eval", sampleHoldoutEval, sampleHoldoutEvalSql),
+    QueryDef("q_feature_importance", qFeatureImportance, qFeatureImportanceSql),
+    QueryDef("q_gbt_importance", qGbtImportance, qGbtImportanceSql),
+    QueryDef("q_model_compare", qModelCompare, qModelCompareSql),
+    QueryDef("q_cost_curve", qCostCurve, qCostCurveSql),
+    QueryDef("q_isotonic_calibration", qIsotonicCalibration,
+      qIsotonicCalibrationSql),
+    QueryDef("sample_slice_eval", sampleSliceEval, sampleSliceEvalSql),
+    QueryDef("q_oob_eval", qOobEval, qOobEvalSql))
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
+
 /** Round 15 — the forest side of the evaluation-protocol family:
   * k-fold cross-validation (B105) and the learning curve (J21) for
   * the B90 random forest, plus the per-fold McNemar comparison
@@ -650,17 +652,11 @@ object Round15Ops {
        |FROM ccal""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_forest_cv_auc" -> (qForestCvAuc _),
-    "sample_forest_curve" -> (sampleForestCurve _),
-    "q_model_compare_cv" -> (qModelCompareCv _),
-    "q_forest_importance_cv" -> (qForestImportanceCv _),
-    "q_calibration_cv" -> (qCalibrationCv _))
-
-  val oracleSql: Map[String, String] = Map(
-    "q_forest_cv_auc" -> qForestCvAucSql,
-    "sample_forest_curve" -> sampleForestCurveSql,
-    "q_model_compare_cv" -> qModelCompareCvSql,
-    "q_forest_importance_cv" -> qForestImportanceCvSql,
-    "q_calibration_cv" -> qCalibrationCvSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q_forest_cv_auc", qForestCvAuc, qForestCvAucSql),
+    QueryDef("sample_forest_curve", sampleForestCurve, sampleForestCurveSql),
+    QueryDef("q_model_compare_cv", qModelCompareCv, qModelCompareCvSql),
+    QueryDef("q_forest_importance_cv", qForestImportanceCv,
+      qForestImportanceCvSql),
+    QueryDef("q_calibration_cv", qCalibrationCv, qCalibrationCvSql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.QueryDef
 import graft.Tables
 
 /** Round 16 — the LAYERED graph-ANN index (E28 `ann_graph_layered`,
@@ -211,17 +212,17 @@ object Round16Ops {
   private def coarseParts(cemb: DataFrame)
       : (DataFrame, DataFrame) = {
     import graft.functions.gf
-    val queries = cemb.filter(col("vec_id") < 10)
+    val queryVecs = cemb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val ex = exemplars(cemb)
-    val coarse = broadcast(queries.select(col("qid"))
+    val coarse = broadcast(queryVecs.select(col("qid"))
         .crossJoin(broadcast(ex)))
       .join(cemb.select(col("vec_id").as("nid"), col("v")), "nid")
-      .join(broadcast(queries), "qid")
+      .join(broadcast(queryVecs), "qid")
       .select(col("qid"), col("nid"),
         round(gf.cosine_sim(col("qv"), col("v")), 6).as("sim"))
       .localCheckpoint(true)
-    (queries, coarse)
+    (queryVecs, coarse)
   }
 
   /** Shared traversal state: (cemb, symmetrized edges [persisted —
@@ -1270,21 +1271,14 @@ object Round16Ops {
        |    // greatest(l.pp * l.nn, 1) AS regret_ppm
        |FROM tloc l JOIN tsnap s USING (fold)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_graph_layered" -> (annGraphLayered _),
-    "ann_layered_sweep" -> (annLayeredSweep _),
-    "q_calibration_fix" -> (qCalibrationFix _),
-    "q_threshold_transfer" -> (qThresholdTransfer _),
-    "dedup_paragraph" -> (dedupParagraph _),
-    "ann_layered_incremental" -> (annLayeredIncremental _))
-
-  val oracleSql: Map[String, String] = Map(
-    "ann_graph_layered" -> annGraphLayeredSql,
-    "ann_layered_sweep" -> annLayeredSweepSql,
-    "q_calibration_fix" -> qCalibrationFixSql,
-    "q_threshold_transfer" -> qThresholdTransferSql,
-    "dedup_paragraph" -> dedupParagraphSql,
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("ann_graph_layered", annGraphLayered, annGraphLayeredSql),
+    QueryDef("ann_layered_sweep", annLayeredSweep, annLayeredSweepSql),
+    QueryDef("q_calibration_fix", qCalibrationFix, qCalibrationFixSql),
+    QueryDef("q_threshold_transfer", qThresholdTransfer, qThresholdTransferSql),
+    QueryDef("dedup_paragraph", dedupParagraph, dedupParagraphSql),
     // the oracle is E28's full-rebuild SQL — hash equality proves the
     // refreshed standing index searches identically to a rebuild
-    "ann_layered_incremental" -> annGraphLayeredSql)
+    QueryDef("ann_layered_incremental", annLayeredIncremental,
+      annGraphLayeredSql))
 }

@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType,
   StructField, StructType}
 
+import graft.QueryDef
+
 /** Round 17 — the streaming ANN-index refresh (G28
   * `streaming_ann_refresh`: the G16 segment-append discipline applied
   * to E30's layered-index maintenance) and the out-of-sample
@@ -812,21 +814,18 @@ object Round17Ops {
        |    - bnum_post // (n_held * 1000000) AS improvement_ppm
        |FROM hsum""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "streaming_ann_refresh" -> (streamingAnnRefresh _),
-    "streaming_ann_cap_refresh" -> (streamingAnnCapRefresh _),
-    "ann_layered_cap_incremental" -> (annLayeredCapIncremental _),
-    "q_calibration_oos" -> (qCalibrationOos _))
-
-  val oracleSql: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // the oracle IS E28's full-rebuild SQL — hash equality proves the
     // streamed segment refreshes search identically to a rebuild
-    "streaming_ann_refresh" -> Round16Ops.annGraphLayeredSql,
+    QueryDef("streaming_ann_refresh", streamingAnnRefresh,
+      Round16Ops.annGraphLayeredSql),
+    // the multi-epoch-structured capped rebuild + E28's search chain
+    QueryDef("streaming_ann_cap_refresh", streamingAnnCapRefresh,
+      streamingAnnCapRefreshSql),
     // the epoch-structured capped rebuild + E28's search chain — hash
     // equality proves refresh ≡ rebuild under the epoch-pinned-reps
     // contract
-    "ann_layered_cap_incremental" -> annLayeredCapIncrementalSql,
-    // the multi-epoch-structured capped rebuild + E28's search chain
-    "streaming_ann_cap_refresh" -> streamingAnnCapRefreshSql,
-    "q_calibration_oos" -> qCalibrationOosSql)
+    QueryDef("ann_layered_cap_incremental", annLayeredCapIncremental,
+      annLayeredCapIncrementalSql),
+    QueryDef("q_calibration_oos", qCalibrationOos, qCalibrationOosSql))
 }

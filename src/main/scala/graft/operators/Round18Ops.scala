@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
+
 /** Round 18 — EPOCH COMPACTION for the capped ANN substrate (E32
   * `ann_epoch_compact`: the one leg of the E31/G29 index lifecycle
   * that existed only as prose — "epoch merge IS a fresh capped build"
@@ -444,18 +446,15 @@ object Round18Ops {
        |    ELSE CAST(0 AS BIGINT) END AS improvement_ppm
        |FROM hsum h JOIN fgate g USING (fold)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_epoch_compact" -> (annEpochCompact _),
-    "streaming_ann_lifecycle" -> (streamingAnnLifecycle _),
-    "q_calibration_oos_gated" -> (qCalibrationOosGated _))
-
-  val oracleSql: Map[String, String] = Map(
+  val defs: Seq[QueryDef] = Seq(
     // the fresh single-epoch capped rebuild + E28's search chain —
     // hash equality proves compaction-from-segments ≡ fresh rebuild
-    "ann_epoch_compact" -> annEpochCompactSql,
+    QueryDef("ann_epoch_compact", annEpochCompact, annEpochCompactSql),
     // the rebuild under the post-compaction epoch labels + E28's
     // search chain — hash equality proves the full loop (stream →
     // compact → stream → merge → search) ≡ that rebuild
-    "streaming_ann_lifecycle" -> streamingAnnLifecycleSql,
-    "q_calibration_oos_gated" -> qCalibrationOosGatedSql)
+    QueryDef("streaming_ann_lifecycle", streamingAnnLifecycle,
+      streamingAnnLifecycleSql),
+    QueryDef("q_calibration_oos_gated", qCalibrationOosGated,
+      qCalibrationOosGatedSql))
 }

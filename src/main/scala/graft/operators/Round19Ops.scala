@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
+
 /** Round 19 — TOMBSTONE DELETES + delete-aware compaction for the
   * capped ANN substrate (E33 `ann_tombstone_compact`): the missing
   * lifecycle leg after ingest (E31/G29) and epoch merge (E32) — the
@@ -274,9 +276,7 @@ object Round19Ops {
        |${Round16Ops.clusteredCoarseCtes},
        |${Round16Ops.layeredSearchSqlTail}""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ann_tombstone_compact" -> (annTombstoneCompact _))
-
-  val oracleSql: Map[String, String] = Map(
-    "ann_tombstone_compact" -> annTombstoneCompactSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("ann_tombstone_compact", annTombstoneCompact,
+      annTombstoneCompactSql))
 }

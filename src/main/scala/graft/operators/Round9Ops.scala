@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.QueryDef
 import graft.Tables
 import graft.functions.gf
 
@@ -1193,33 +1194,20 @@ object Round9Ops {
       |  event_id, h
       |FROM r WHERE sample_rank <= 16""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_cusum_changepoint" -> qCusumChangepoint _,
-    "dedup_band_sweep" -> dedupBandSweep _,
-    "q_mann_whitney" -> qMannWhitney _,
-    "q_survival_km" -> qSurvivalKm _,
-    "text_rake" -> textRake _,
-    "dedup_cluster_stability" -> dedupClusterStability _,
-    "sketch_reservoir" -> sketchReservoir _,
-    "etl_cdc_diff" -> etlCdcDiff _,
-    "dedup_kcore" -> dedupKcore _,
-    "sketch_bloom_calibration" -> sketchBloomCalibration _,
-    "sample_dsir" -> sampleDsir _,
-    "text_nb_classify" -> textNbClassify _,
-    "ann_sq_sweep" -> annSqSweep _)
-
-  def oracleSql: Map[String, String] = Map(
-    "q_cusum_changepoint" -> qCusumChangepointSql,
-    "dedup_band_sweep" -> dedupBandSweepSql,
-    "q_mann_whitney" -> qMannWhitneySql,
-    "q_survival_km" -> qSurvivalKmSql,
-    "text_rake" -> textRakeSql,
-    "dedup_cluster_stability" -> dedupClusterStabilitySql,
-    "sketch_reservoir" -> sketchReservoirSql,
-    "etl_cdc_diff" -> etlCdcDiffSql,
-    "dedup_kcore" -> dedupKcoreSql,
-    "sketch_bloom_calibration" -> sketchBloomCalibrationSql,
-    "sample_dsir" -> sampleDsirSql,
-    "text_nb_classify" -> textNbClassifySql,
-    "ann_sq_sweep" -> annSqSweepSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q_cusum_changepoint", qCusumChangepoint, qCusumChangepointSql),
+    QueryDef("dedup_band_sweep", dedupBandSweep, dedupBandSweepSql),
+    QueryDef("q_mann_whitney", qMannWhitney, qMannWhitneySql),
+    QueryDef("q_survival_km", qSurvivalKm, qSurvivalKmSql),
+    QueryDef("text_rake", textRake, textRakeSql),
+    QueryDef("dedup_cluster_stability", dedupClusterStability,
+      dedupClusterStabilitySql),
+    QueryDef("sketch_reservoir", sketchReservoir, sketchReservoirSql),
+    QueryDef("etl_cdc_diff", etlCdcDiff, etlCdcDiffSql),
+    QueryDef("dedup_kcore", dedupKcore, dedupKcoreSql),
+    QueryDef("sketch_bloom_calibration", sketchBloomCalibration,
+      sketchBloomCalibrationSql),
+    QueryDef("sample_dsir", sampleDsir, sampleDsirSql),
+    QueryDef("text_nb_classify", textNbClassify, textNbClassifySql),
+    QueryDef("ann_sq_sweep", annSqSweep, annSqSweepSql))
 }

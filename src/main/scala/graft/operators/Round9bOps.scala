@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.QueryDef
 import graft.Tables
 import graft.functions.gf
 
@@ -1007,31 +1008,17 @@ object Round9bOps {
     s"""WITH RECURSIVE ${ClusterOps.componentsSqlCtes}
        |SELECT doc_id, cluster_id FROM lab""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "etl_url_canonical" -> etlUrlCanonical _,
-    "etl_crawl_schedule" -> etlCrawlSchedule _,
-    "q_l_diversity" -> qLDiversity _,
-    "q_gini" -> qGini _,
-    "q_rfm_segmentation" -> qRfmSegmentation _,
-    "q_bootstrap_ci" -> qBootstrapCi _,
-    "q_ks_test" -> qKsTest _,
-    "q_grid_knn_join" -> qGridKnnJoin _,
-    "dedup_bbit_minhash" -> dedupBbitMinhash _,
-    "sample_coreset" -> sampleCoreset _,
-    "dedup_cc_twostar" -> dedupCcTwostar _,
-    "dedup_prefix_join" -> dedupPrefixJoin _)
-
-  def oracleSql: Map[String, String] = Map(
-    "etl_url_canonical" -> etlUrlCanonicalSql,
-    "etl_crawl_schedule" -> etlCrawlScheduleSql,
-    "q_l_diversity" -> qLDiversitySql,
-    "q_gini" -> qGiniSql,
-    "q_rfm_segmentation" -> qRfmSegmentationSql,
-    "q_bootstrap_ci" -> qBootstrapCiSql,
-    "q_ks_test" -> qKsTestSql,
-    "q_grid_knn_join" -> qGridKnnJoinSql,
-    "dedup_bbit_minhash" -> dedupBbitMinhashSql,
-    "sample_coreset" -> sampleCoresetSql,
-    "dedup_cc_twostar" -> dedupCcTwostarSql,
-    "dedup_prefix_join" -> dedupPrefixJoinSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("etl_url_canonical", etlUrlCanonical, etlUrlCanonicalSql),
+    QueryDef("etl_crawl_schedule", etlCrawlSchedule, etlCrawlScheduleSql),
+    QueryDef("q_l_diversity", qLDiversity, qLDiversitySql),
+    QueryDef("q_gini", qGini, qGiniSql),
+    QueryDef("q_rfm_segmentation", qRfmSegmentation, qRfmSegmentationSql),
+    QueryDef("q_bootstrap_ci", qBootstrapCi, qBootstrapCiSql),
+    QueryDef("q_ks_test", qKsTest, qKsTestSql),
+    QueryDef("q_grid_knn_join", qGridKnnJoin, qGridKnnJoinSql),
+    QueryDef("dedup_bbit_minhash", dedupBbitMinhash, dedupBbitMinhashSql),
+    QueryDef("sample_coreset", sampleCoreset, sampleCoresetSql),
+    QueryDef("dedup_cc_twostar", dedupCcTwostar, dedupCcTwostarSql),
+    QueryDef("dedup_prefix_join", dedupPrefixJoin, dedupPrefixJoinSql))
 }

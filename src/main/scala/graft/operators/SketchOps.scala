@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Liter
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.graftshim.Bridge
 
+import graft.QueryDef
 import graft.Tables
 import graft.functions.{gf, MinHashAgg}
 
@@ -780,25 +781,15 @@ object SketchOps {
        |ORDER BY g.p""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sketch_qdigest" -> sketchQdigest _,
-    "sketch_hll_calibration" -> sketchHllCalibration _,
-    "sketch_ams_f2" -> sketchAmsF2 _,
-    "sketch_source_similarity" -> sketchSourceSimilarity _,
-    "sketch_bloom_prefilter" -> bloomPrefilter _,
-    "sketch_hll_distinct" -> sketchHllDistinct _,
-    "sketch_kmv_setops" -> sketchKmvSetops _,
-    "sketch_profile_fused" -> sketchProfileFused _
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "sketch_qdigest" -> sketchQdigestSql,
-    "sketch_hll_calibration" -> sketchHllCalibrationSql,
-    "sketch_ams_f2" -> sketchAmsF2Sql,
-    "sketch_source_similarity" -> sketchSourceSimilaritySql,
-    "sketch_bloom_prefilter" -> bloomPrefilterSql,
-    "sketch_hll_distinct" -> sketchHllDistinctSql,
-    "sketch_kmv_setops" -> sketchKmvSetopsSql,
-    "sketch_profile_fused" -> sketchProfileFusedSql
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("sketch_qdigest", sketchQdigest, sketchQdigestSql),
+    QueryDef("sketch_hll_calibration", sketchHllCalibration,
+      sketchHllCalibrationSql),
+    QueryDef("sketch_ams_f2", sketchAmsF2, sketchAmsF2Sql),
+    QueryDef("sketch_source_similarity", sketchSourceSimilarity,
+      sketchSourceSimilaritySql),
+    QueryDef("sketch_bloom_prefilter", bloomPrefilter, bloomPrefilterSql),
+    QueryDef("sketch_hll_distinct", sketchHllDistinct, sketchHllDistinctSql),
+    QueryDef("sketch_kmv_setops", sketchKmvSetops, sketchKmvSetopsSql),
+    QueryDef("sketch_profile_fused", sketchProfileFused, sketchProfileFusedSql))
 }

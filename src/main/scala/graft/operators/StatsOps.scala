@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.Tables
 
 /** Round-6 statistical / stream-profiling operators.
@@ -1015,43 +1016,23 @@ object StatsOps {
       |FROM digits JOIN expected USING (digit), tot
       |ORDER BY digit""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_chisq_independence" -> qChisqIndependence _,
-    "q_benford" -> qBenford _,
-    "q_skew_profile" -> qSkewProfile _,
-    "q_event_paths" -> qEventPaths _,
-    "q_seasonality" -> qSeasonality _,
-    "q_abtest_ztest" -> qAbtestZtest _,
-    "q_retention_matrix" -> qRetentionMatrix _,
-    "q_autocorr" -> qAutocorr _,
-    "q_decay_agg" -> qDecayAgg _,
-    "q_psi_drift" -> qPsiDrift _,
-    "sketch_log_histogram" -> sketchLogHistogram _,
-    "q_interarrival" -> qInterarrival _,
-    "q_outliers_zscore" -> qOutliersZscore _,
-    "event_transitions" -> eventTransitions _,
-    "text_pmi" -> textPmi _,
-    "sketch_heavy_hitters" -> sketchHeavyHitters _,
-    "q_mad_outliers" -> qMadOutliers _,
-    "event_cooccurrence" -> eventCooccurrence _)
-
-  def oracleSql: Map[String, String] = Map(
-    "q_chisq_independence" -> qChisqIndependenceSql,
-    "q_benford" -> qBenfordSql,
-    "q_skew_profile" -> qSkewProfileSql,
-    "q_event_paths" -> qEventPathsSql,
-    "q_seasonality" -> qSeasonalitySql,
-    "q_abtest_ztest" -> qAbtestZtestSql,
-    "q_retention_matrix" -> qRetentionMatrixSql,
-    "q_autocorr" -> qAutocorrSql,
-    "q_decay_agg" -> qDecayAggSql,
-    "q_psi_drift" -> qPsiDriftSql,
-    "sketch_log_histogram" -> sketchLogHistogramSql,
-    "q_interarrival" -> qInterarrivalSql,
-    "q_outliers_zscore" -> qOutliersZscoreSql,
-    "event_transitions" -> eventTransitionsSql,
-    "text_pmi" -> textPmiSql,
-    "sketch_heavy_hitters" -> sketchHeavyHittersSql,
-    "q_mad_outliers" -> qMadOutliersSql,
-    "event_cooccurrence" -> eventCooccurrenceSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q_chisq_independence", qChisqIndependence, qChisqIndependenceSql),
+    QueryDef("q_benford", qBenford, qBenfordSql),
+    QueryDef("q_skew_profile", qSkewProfile, qSkewProfileSql),
+    QueryDef("q_event_paths", qEventPaths, qEventPathsSql),
+    QueryDef("q_seasonality", qSeasonality, qSeasonalitySql),
+    QueryDef("q_abtest_ztest", qAbtestZtest, qAbtestZtestSql),
+    QueryDef("q_retention_matrix", qRetentionMatrix, qRetentionMatrixSql),
+    QueryDef("q_autocorr", qAutocorr, qAutocorrSql),
+    QueryDef("q_decay_agg", qDecayAgg, qDecayAggSql),
+    QueryDef("q_psi_drift", qPsiDrift, qPsiDriftSql),
+    QueryDef("sketch_log_histogram", sketchLogHistogram, sketchLogHistogramSql),
+    QueryDef("q_interarrival", qInterarrival, qInterarrivalSql),
+    QueryDef("q_outliers_zscore", qOutliersZscore, qOutliersZscoreSql),
+    QueryDef("event_transitions", eventTransitions, eventTransitionsSql),
+    QueryDef("text_pmi", textPmi, textPmiSql),
+    QueryDef("sketch_heavy_hitters", sketchHeavyHitters, sketchHeavyHittersSql),
+    QueryDef("q_mad_outliers", qMadOutliers, qMadOutliersSql),
+    QueryDef("event_cooccurrence", eventCooccurrence, eventCooccurrenceSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables
 import graft.functions.gf
 
@@ -908,43 +909,22 @@ object TextOps {
       |  AND k.line_h = c.line_h
       |GROUP BY k.doc_id ORDER BY k.doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_line_dedup" -> textLineDedup _,
-    "text_seg_dedup" -> textSegDedup _,
-    "text_zipf" -> textZipf _,
-    "text_readability" -> textReadability _,
-    "text_bpe_pairs" -> textBpePairs _,
-    "text_repetition" -> textRepetition _,
-    "text_ngram_freq" -> textNgramFreq _,
-    "text_chunks" -> textChunks _,
-    "text_lm_score" -> textLmScore _,
-    "text_quality_gate" -> textQualityGate _,
-    "text_redact" -> textRedact _,
-    "text_token_count" -> textTokenCount _,
-    "text_quality_score" -> textQualityScore _,
-    "text_lang_id" -> textLangId _,
-    "text_fingerprint" -> textFingerprint _,
-    "text_shingles" -> textShingles _,
-    "text_entropy" -> textEntropy _
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "text_line_dedup" -> textLineDedupSql,
-    "text_seg_dedup" -> textSegDedupSql,
-    "text_zipf" -> textZipfSql,
-    "text_readability" -> textReadabilitySql,
-    "text_bpe_pairs" -> textBpePairsSql,
-    "text_repetition" -> textRepetitionSql,
-    "text_ngram_freq" -> textNgramFreqSql,
-    "text_chunks" -> textChunksSql,
-    "text_lm_score" -> textLmScoreSql,
-    "text_quality_gate" -> textQualityGateSql,
-    "text_redact" -> textRedactSql,
-    "text_token_count" -> textTokenCountSql,
-    "text_quality_score" -> textQualityScoreSql,
-    "text_lang_id" -> textLangIdSql,
-    "text_fingerprint" -> textFingerprintSql,
-    "text_shingles" -> textShinglesSql,
-    "text_entropy" -> textEntropySql
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("text_line_dedup", textLineDedup, textLineDedupSql),
+    QueryDef("text_seg_dedup", textSegDedup, textSegDedupSql),
+    QueryDef("text_zipf", textZipf, textZipfSql),
+    QueryDef("text_readability", textReadability, textReadabilitySql),
+    QueryDef("text_bpe_pairs", textBpePairs, textBpePairsSql),
+    QueryDef("text_repetition", textRepetition, textRepetitionSql),
+    QueryDef("text_ngram_freq", textNgramFreq, textNgramFreqSql),
+    QueryDef("text_chunks", textChunks, textChunksSql),
+    QueryDef("text_lm_score", textLmScore, textLmScoreSql),
+    QueryDef("text_quality_gate", textQualityGate, textQualityGateSql),
+    QueryDef("text_redact", textRedact, textRedactSql),
+    QueryDef("text_token_count", textTokenCount, textTokenCountSql),
+    QueryDef("text_quality_score", textQualityScore, textQualityScoreSql),
+    QueryDef("text_lang_id", textLangId, textLangIdSql),
+    QueryDef("text_fingerprint", textFingerprint, textFingerprintSql),
+    QueryDef("text_shingles", textShingles, textShinglesSql),
+    QueryDef("text_entropy", textEntropy, textEntropySql))
 }

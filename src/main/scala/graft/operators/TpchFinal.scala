@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.Tables
 
 /** The last four TPC-H query shapes (Q2, Q11, Q16, Q20), completing
@@ -222,15 +223,9 @@ object TpchFinal {
       |WHERE q97 * 5 > q_total
       |ORDER BY s_name""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q2_min_cost_supplier" -> q2MinCostSupplier _,
-    "q11_important_parts" -> q11ImportantParts _,
-    "q16_supplier_count" -> q16SupplierCount _,
-    "q20_promo_suppliers" -> q20PromoSuppliers _)
-
-  def oracleSql: Map[String, String] = Map(
-    "q2_min_cost_supplier" -> q2MinCostSupplierSql,
-    "q11_important_parts" -> q11ImportantPartsSql,
-    "q16_supplier_count" -> q16SupplierCountSql,
-    "q20_promo_suppliers" -> q20PromoSuppliersSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q2_min_cost_supplier", q2MinCostSupplier, q2MinCostSupplierSql),
+    QueryDef("q11_important_parts", q11ImportantParts, q11ImportantPartsSql),
+    QueryDef("q16_supplier_count", q16SupplierCount, q16SupplierCountSql),
+    QueryDef("q20_promo_suppliers", q20PromoSuppliers, q20PromoSuppliersSql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.Tables
 
 /** Remaining TPC-H query shapes, adapted to the driver schema (which
@@ -289,25 +290,14 @@ object TpchMore {
       |    AND o_orderdate >= TIMESTAMP '1999-01-01 00:00:00')
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q7_volume_shipping" -> q7VolumeShipping _,
-    "q8_market_share" -> q8MarketShare _,
-    "q9_product_profit" -> q9ProductProfit _,
-    "q10_returned_items" -> q10ReturnedItems _,
-    "q13_customer_distribution" -> q13CustomerDistribution _,
-    "q15_top_supplier" -> q15TopSupplier _,
-    "q18_large_orders" -> q18LargeOrders _,
-    "q22_dormant_value" -> q22DormantValue _
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q7_volume_shipping" -> q7VolumeShippingSql,
-    "q8_market_share" -> q8MarketShareSql,
-    "q9_product_profit" -> q9ProductProfitSql,
-    "q10_returned_items" -> q10ReturnedItemsSql,
-    "q13_customer_distribution" -> q13CustomerDistributionSql,
-    "q15_top_supplier" -> q15TopSupplierSql,
-    "q18_large_orders" -> q18LargeOrdersSql,
-    "q22_dormant_value" -> q22DormantValueSql
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q7_volume_shipping", q7VolumeShipping, q7VolumeShippingSql),
+    QueryDef("q8_market_share", q8MarketShare, q8MarketShareSql),
+    QueryDef("q9_product_profit", q9ProductProfit, q9ProductProfitSql),
+    QueryDef("q10_returned_items", q10ReturnedItems, q10ReturnedItemsSql),
+    QueryDef("q13_customer_distribution", q13CustomerDistribution,
+      q13CustomerDistributionSql),
+    QueryDef("q15_top_supplier", q15TopSupplier, q15TopSupplierSql),
+    QueryDef("q18_large_orders", q18LargeOrders, q18LargeOrdersSql),
+    QueryDef("q22_dormant_value", q22DormantValue, q22DormantValueSql))
 }

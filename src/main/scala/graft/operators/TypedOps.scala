@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables
 
 /** Typed Dataset API surface (case-class encoders, groupByKey) —
@@ -147,15 +148,9 @@ object TypedOps {
       |  count(*) AS n, min(o_totalprice) AS lo, max(o_totalprice) AS hi
       |FROM orders GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "typed_customer_journey" -> typedCustomerJourney _,
-    "q_cohort" -> qCohort _,
-    "q_histogram" -> qHistogram _
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "typed_customer_journey" -> typedCustomerJourneySql,
-    "q_cohort" -> qCohortSql,
-    "q_histogram" -> qHistogramSql
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("typed_customer_journey", typedCustomerJourney,
+      typedCustomerJourneySql),
+    QueryDef("q_cohort", qCohort, qCohortSql),
+    QueryDef("q_histogram", qHistogram, qHistogramSql))
 }

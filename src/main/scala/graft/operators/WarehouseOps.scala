@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.QueryDef
 import graft.Tables
 import graft.functions.gf
 
@@ -489,25 +490,14 @@ object WarehouseOps {
       |  CAST(sum(n_chars) AS BIGINT) * 100 // 4096 AS fill_pct
       |FROM files GROUP BY 1, 2 ORDER BY source, bin_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "etl_compaction_plan" -> etlCompactionPlan _,
-    "q_k_anonymity" -> qKAnonymity _,
-    "etl_late_arrivals" -> etlLateArrivals _,
-    "etl_resample_gapfill" -> etlResampleGapfill _,
-    "etl_fk_audit" -> etlFkAudit _,
-    "q_pareto_frontier" -> qParetoFrontier _,
-    "q_zorder_layout" -> qZorderLayout _,
-    "q_bitmap_rollup" -> qBitmapRollup _,
-    "sample_shard_assign" -> sampleShardAssign _)
-
-  def oracleSql: Map[String, String] = Map(
-    "etl_compaction_plan" -> etlCompactionPlanSql,
-    "q_k_anonymity" -> qKAnonymitySql,
-    "etl_late_arrivals" -> etlLateArrivalsSql,
-    "etl_resample_gapfill" -> etlResampleGapfillSql,
-    "etl_fk_audit" -> etlFkAuditSql,
-    "q_pareto_frontier" -> qParetoFrontierSql,
-    "q_zorder_layout" -> qZorderLayoutSql,
-    "q_bitmap_rollup" -> qBitmapRollupSql,
-    "sample_shard_assign" -> sampleShardAssignSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("etl_compaction_plan", etlCompactionPlan, etlCompactionPlanSql),
+    QueryDef("q_k_anonymity", qKAnonymity, qKAnonymitySql),
+    QueryDef("etl_late_arrivals", etlLateArrivals, etlLateArrivalsSql),
+    QueryDef("etl_resample_gapfill", etlResampleGapfill, etlResampleGapfillSql),
+    QueryDef("etl_fk_audit", etlFkAudit, etlFkAuditSql),
+    QueryDef("q_pareto_frontier", qParetoFrontier, qParetoFrontierSql),
+    QueryDef("q_zorder_layout", qZorderLayout, qZorderLayoutSql),
+    QueryDef("q_bitmap_rollup", qBitmapRollup, qBitmapRollupSql),
+    QueryDef("sample_shard_assign", sampleShardAssign, sampleShardAssignSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.QueryDef
 import graft.Tables
 
 /** As-of (point-in-time) join — an operator Spark's DataFrame API
@@ -76,11 +77,6 @@ object AsOf {
       |ASOF LEFT JOIN o
       |  ON e.user_id = o.o_custkey AND e.ts >= o.o_orderdate""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_asof_join" -> qAsofJoin _
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_asof_join" -> qAsofJoinSql
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q_asof_join", qAsofJoin, qAsofJoinSql))
 }

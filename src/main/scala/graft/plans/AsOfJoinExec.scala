@@ -10,6 +10,8 @@ import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.graftshim.Bridge
 
+import graft.QueryDef
+
 /** The full custom-operator stack for the as-of join (SURVEY.md §2.H6):
   * logical node → planner strategy → physical sort-merge exec.
   *
@@ -185,11 +187,6 @@ object AsOfExec {
         col("o_orderdate").cast("timestamp_ntz").as("o_orderdate"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_asof_join_exec" -> qAsofJoinExec _
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_asof_join_exec" -> AsOf.qAsofJoinSql
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q_asof_join_exec", qAsofJoinExec, AsOf.qAsofJoinSql))
 }

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QueryDef
 import graft.Tables
 
 /** Interval (range) join — pairs of rows whose time values fall
@@ -60,11 +61,6 @@ object RangeJoin {
       |  AND CAST(floor(epoch(b.ts)) AS BIGINT)
       |    - CAST(floor(epoch(a.ts)) AS BIGINT) <= 300""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_range_join" -> qRangeJoin _
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_range_join" -> qRangeJoinSql
-  )
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("q_range_join", qRangeJoin, qRangeJoinSql))
 }

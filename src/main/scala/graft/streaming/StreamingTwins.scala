@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.QueryDef
 import graft.Tables
 
 /** Oracled batch twins of the Structured Streaming operators
@@ -1529,61 +1530,44 @@ object StreamingTwins {
     * same table. */
   val streamingIvmSql: String = graft.operators.Round12Ops.warehouseIvmSql
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "streaming_model_score" -> streamingModelScore _,
-    "streaming_drift_psi" -> streamingDriftPsi _,
-    "streaming_confusion_monitor" -> streamingConfusionMonitor _,
-    "streaming_ivm" -> streamingIvm _,
-    "streaming_ivm_distinct" -> streamingIvmDistinct _,
-    "streaming_weighted_quantiles" -> streamingWeightedQuantiles _,
-    "streaming_qdigest" -> streamingQdigest _,
-    "streaming_semi_join" -> streamingSemiJoin _,
-    "streaming_reservoir" -> streamingReservoir _,
-    "streaming_full_outer" -> streamingFullOuter _,
-    "streaming_upsert_sink" -> streamingUpsertSink _,
-    "streaming_log_histogram" -> streamingLogHistogram _,
-    "streaming_index_refresh" -> streamingIndexRefresh _,
-    "streaming_url_frontier" -> streamingUrlFrontier _,
-    "streaming_coreset" -> streamingCoreset _,
-    "streaming_band_probe" -> streamingBandProbe _,
-    "streaming_session_window" -> streamingSessionWindow _,
-    "streaming_left_join" -> streamingLeftJoin _,
-    "streaming_hll" -> streamingHll _,
-    "streaming_interval_join" -> streamingIntervalJoin _,
-    "streaming_topk" -> streamingTopk _,
-    "streaming_cms" -> streamingCms _,
-    "streaming_window_counts" -> streamingWindowCounts _,
-    "streaming_sessionize" -> streamingSessionize _,
-    "streaming_dedup" -> streamingDedup _,
-    "streaming_enrich" -> streamingEnrich _,
-    "streaming_hopping" -> streamingHopping _)
-
-  def oracleSql: Map[String, String] = Map(
-    "streaming_model_score" -> streamingModelScoreSql,
-    "streaming_drift_psi" -> streamingDriftPsiSql,
-    "streaming_confusion_monitor" -> streamingConfusionMonitorSql,
-    "streaming_ivm" -> streamingIvmSql,
-    "streaming_ivm_distinct" -> streamingIvmDistinctSql,
-    "streaming_weighted_quantiles" -> streamingWeightedQuantilesSql,
-    "streaming_qdigest" -> streamingQdigestSql,
-    "streaming_semi_join" -> streamingSemiJoinSql,
-    "streaming_reservoir" -> streamingReservoirSql,
-    "streaming_full_outer" -> streamingFullOuterSql,
-    "streaming_upsert_sink" -> streamingUpsertSinkSql,
-    "streaming_log_histogram" -> streamingLogHistogramSql,
-    "streaming_index_refresh" -> streamingIndexRefreshSql,
-    "streaming_url_frontier" -> streamingUrlFrontierSql,
-    "streaming_coreset" -> streamingCoresetSql,
-    "streaming_band_probe" -> streamingBandProbeSql,
-    "streaming_session_window" -> streamingSessionWindowSql,
-    "streaming_left_join" -> streamingLeftJoinSql,
-    "streaming_hll" -> streamingHllSql,
-    "streaming_interval_join" -> streamingIntervalJoinSql,
-    "streaming_topk" -> streamingTopkSql,
-    "streaming_cms" -> streamingCmsSql,
-    "streaming_window_counts" -> streamingWindowCountsSql,
-    "streaming_sessionize" -> streamingSessionizeSql,
-    "streaming_dedup" -> streamingDedupSql,
-    "streaming_enrich" -> streamingEnrichSql,
-    "streaming_hopping" -> streamingHoppingSql)
+  val defs: Seq[QueryDef] = Seq(
+    QueryDef("streaming_model_score", streamingModelScore,
+      streamingModelScoreSql),
+    QueryDef("streaming_drift_psi", streamingDriftPsi, streamingDriftPsiSql),
+    QueryDef("streaming_confusion_monitor", streamingConfusionMonitor,
+      streamingConfusionMonitorSql),
+    QueryDef("streaming_ivm", streamingIvm, streamingIvmSql),
+    QueryDef("streaming_ivm_distinct", streamingIvmDistinct,
+      streamingIvmDistinctSql),
+    QueryDef("streaming_weighted_quantiles", streamingWeightedQuantiles,
+      streamingWeightedQuantilesSql),
+    QueryDef("streaming_qdigest", streamingQdigest, streamingQdigestSql),
+    QueryDef("streaming_semi_join", streamingSemiJoin, streamingSemiJoinSql),
+    QueryDef("streaming_reservoir", streamingReservoir, streamingReservoirSql),
+    QueryDef("streaming_full_outer", streamingFullOuter, streamingFullOuterSql),
+    QueryDef("streaming_upsert_sink", streamingUpsertSink,
+      streamingUpsertSinkSql),
+    QueryDef("streaming_log_histogram", streamingLogHistogram,
+      streamingLogHistogramSql),
+    QueryDef("streaming_index_refresh", streamingIndexRefresh,
+      streamingIndexRefreshSql),
+    QueryDef("streaming_url_frontier", streamingUrlFrontier,
+      streamingUrlFrontierSql),
+    QueryDef("streaming_coreset", streamingCoreset, streamingCoresetSql),
+    QueryDef("streaming_band_probe", streamingBandProbe, streamingBandProbeSql),
+    QueryDef("streaming_session_window", streamingSessionWindow,
+      streamingSessionWindowSql),
+    QueryDef("streaming_left_join", streamingLeftJoin, streamingLeftJoinSql),
+    QueryDef("streaming_hll", streamingHll, streamingHllSql),
+    QueryDef("streaming_interval_join", streamingIntervalJoin,
+      streamingIntervalJoinSql),
+    QueryDef("streaming_topk", streamingTopk, streamingTopkSql),
+    QueryDef("streaming_cms", streamingCms, streamingCmsSql),
+    QueryDef("streaming_window_counts", streamingWindowCounts,
+      streamingWindowCountsSql),
+    QueryDef("streaming_sessionize", streamingSessionize,
+      streamingSessionizeSql),
+    QueryDef("streaming_dedup", streamingDedup, streamingDedupSql),
+    QueryDef("streaming_enrich", streamingEnrich, streamingEnrichSql),
+    QueryDef("streaming_hopping", streamingHopping, streamingHoppingSql))
 }

@@ -29,16 +29,11 @@ class EntrySpec extends SparkSuite {
   }
 
   test("every query key has a runnable plan at sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
-      assert(df.columns.nonEmpty, s"$name has no columns")
-      df.count() // must execute
+    val sweep = QuerySweep(spark, sf).get
+    assert(sweep.errors.isEmpty, s"plans that failed to run: ${sweep.errors}")
+    SparkEntry.queries.keys.foreach { name =>
+      assert(sweep.columns.getOrElse(name, 0) > 0, s"$name has no columns")
     }
-  }
-
-  test("oracleSql keys are a subset of queries keys") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracleSql without queries: $missing")
   }
 }
 

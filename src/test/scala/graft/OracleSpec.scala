@@ -1,34 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Path}
-
-import scala.collection.mutable
-import scala.sys.process.{Process, ProcessLogger}
-
 import org.apache.spark.sql.functions.expr
 
-import graft.sources.StoreRoot
-
 /** The oracle gate inside tier-1: Verify's dump of every query at
-  * sf0.001, hash-compared against DuckDB by `tools/check.py`, plus the
-  * failure path every gate must take when a query throws. */
+  * sf0.001, hash-compared against DuckDB by `tools/check.py` (read from
+  * the shared `QuerySweep`), plus the failure path every gate must take
+  * when a query throws. */
 class OracleSpec extends SparkSuite {
-
-  /** Runs `body` on a fresh output directory under a fresh store root,
-    * deleting the directory afterwards. */
-  private def inTempDirs[T](body: Path => T): T =
-    Harness.withFreshStoreRoot(spark) {
-      val out = Files.createTempDirectory("graft-oracle-out")
-      try body(out) finally StoreRoot.deleteRecursively(out)
-    }
-
-  /** `tools/check.py` over `out`: (exit code, stdout lines). */
-  private def check(out: Path): (Int, Seq[String]) = {
-    val lines = mutable.ArrayBuffer.empty[String]
-    val code = Process(Seq("python3", "tools/check.py", sf, out.toString))
-      .!(ProcessLogger(lines += _, System.err.println(_)))
-    (code, lines.toSeq)
-  }
 
   private def passCount(lines: Seq[String]): Int = {
     val summary = """== (\d+) pass, (\d+) fail ==""".r
@@ -37,13 +15,11 @@ class OracleSpec extends SparkSuite {
   }
 
   test("every oracle query passes Verify + check.py at sf0.001") {
-    inTempDirs { out =>
-      val errors = Verify.run(spark, SparkEntry.queries, sf, out.toString, None)
-      assert(errors.isEmpty, s"Verify.run failures: $errors")
-      val (code, lines) = check(out)
-      assert(code == 0, lines.filter(_.startsWith("FAIL")).mkString("\n"))
-      assert(passCount(lines) == SparkEntry.oracleSql.size)
-    }
+    val sweep = QuerySweep(spark, sf).get
+    assert(sweep.errors.isEmpty, s"Verify.run failures: ${sweep.errors}")
+    assert(sweep.checkExit == 0,
+      sweep.checkLines.filter(_.startsWith("FAIL")).mkString("\n"))
+    assert(passCount(sweep.checkLines) == SparkEntry.oracleSql.size)
   }
 
   test("a throwing query fails Harness.run, Verify.run and check.py") {
@@ -54,11 +30,11 @@ class OracleSpec extends SparkSuite {
       case Harness.Failed(_, msg) => assert(msg.contains("injected failure"))
       case ok => fail(s"expected a failure, got $ok")
     }
-    inTempDirs { out =>
+    QuerySweep.inTempDirs(spark) { out =>
       val errors = Verify.run(spark, Map(name -> throwing), sf,
         out.toString, Some(Set(name)))
       assert(errors.map(_._1) == Seq(name))
-      val (code, lines) = check(out)
+      val (code, lines) = QuerySweep.check(sf, out)
       assert(code == 1)
       assert(lines.contains(s"FAIL $name: no output"))
     }

@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{EqualNullSafe, EqualTo}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, Window}
-
 /** Surface-wide plan-hygiene gate (round-8 judge task): walks the
-  * optimized plan of EVERY SparkEntry query and rejects the two
+  * optimized plan of EVERY SparkEntry query (in the shared
+  * `QuerySweep`, on the frame Verify writes) and rejects the two
   * scale-killer shapes the per-round judge grep hunts by hand —
   *
   *   1. an UNPARTITIONED window (Spark's `WindowExec: No Partition
@@ -287,44 +285,22 @@ class PlanHygieneSpec extends SparkSuite {
   // allowlisted (the stale-entry check would reject an unused entry).
 
   test("no unpartitioned windows / non-equi joins outside the documented k-bounded allowlists") {
-    val winViol = scala.collection.mutable.SortedSet[String]()
-    val nejViol = scala.collection.mutable.SortedSet[String]()
-    val bloated = scala.collection.mutable.SortedSet[String]()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(_._1.startsWith("streaming_"))
-      .foreach { case (name, fn) =>
-        val lp = fn(spark, sf).queryExecution.optimizedPlan
-        val win = lp.collect { case w: Window if w.partitionSpec.isEmpty => w }
-        // equi = a TOP-LEVEL And-conjunct that is EqualTo/EqualNullSafe.
-        // The round-8 detector used find(), which also matched an
-        // EqualTo nested under Not — so a pure `=!=` join condition
-        // (BroadcastNestedLoopJoin at execution) passed as equi and the
-        // "every BNLJ is allowlisted" guarantee wasn't enforced
-        // (round-8 ADVICE).
-        def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression)
-            : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-          e match {
-            case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-              conjuncts(l) ++ conjuncts(r)
-            case other => Seq(other)
-          }
-        val nej = lp.collect {
-          case j: Join if !j.condition.exists(c => conjuncts(c).exists(e =>
-            e.isInstanceOf[EqualTo] || e.isInstanceOf[EqualNullSafe])) => j
-        }
-        if (win.nonEmpty) winViol += name
-        if (nej.nonEmpty) nejViol += name
-        // lineage-replay lint: an iterative construction that
-        // re-references its accumulating relation without checkpoint
-        // truncation grows the plan TREE ~3^rounds (ann_mmr's 50.8 s /
-        // the q-digest 2 GB explain string, both fixed this round by
-        // eager localCheckpoint). Any such defect reappearing shows up
-        // as an exploding optimized-plan node count long before it
-        // OOMs — the widest honest plan on the surface is ~250 nodes.
-        val nNodes = lp.collect { case n => n }.length
-        if (nNodes > 1500) bloated += s"$name($nNodes)"
-        CacheHygiene.release(spark)
-      }
+    val sweep = QuerySweep(spark, sf).get
+    // a plan builder that throws is never walked, so it must fail here
+    val unwalked = SparkEntry.queries.keySet
+      .filterNot(_.startsWith("streaming_")) -- sweep.nodeCounts.keySet
+    assert(unwalked.isEmpty, s"plans that could not be built: $unwalked")
+    val winViol = sweep.unpartitionedWindows
+    val nejViol = sweep.nonEquiJoins
+    // lineage-replay lint: an iterative construction that
+    // re-references its accumulating relation without checkpoint
+    // truncation grows the plan TREE ~3^rounds (ann_mmr's 50.8 s /
+    // the q-digest 2 GB explain string, both fixed this round by
+    // eager localCheckpoint). Any such defect reappearing shows up
+    // as an exploding optimized-plan node count long before it
+    // OOMs — the widest honest plan on the surface is ~250 nodes.
+    val bloated = sweep.nodeCounts.toSeq.sorted
+      .collect { case (name, n) if n > 1500 => s"$name($n)" }
     assert(bloated.isEmpty,
       s"plan-tree blowup (likely unCheckpointed iteration): $bloated")
     assert((winViol -- smallWindowOk.keySet).isEmpty,

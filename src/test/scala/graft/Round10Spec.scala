@@ -106,7 +106,7 @@ class Round10Spec extends SparkSuite {
     // volume/lift numbers stop meaning anything
     val sfBig = "/root/testdata/sf0.1"
     val n = Tables.embeddings(spark, sfBig).count().toDouble
-    val exact = topsOf(AnnOps.queries("ann_bruteforce")(spark, sfBig))
+    val exact = topsOf(SparkEntry.queries("ann_bruteforce")(spark, sfBig))
 
     // graph beam search: EXACT visited volume from the traversal state
     val visited = Round10Ops.annGraphVisited(spark, sfBig)
