@@ -930,15 +930,13 @@ object ScaleProbe {
               .select(col("s"), col("y"))
             val outDir = s"$dirP/landed"
             time {
-              val q = scored.writeStream
-                .option("checkpointLocation", s"$dirP/ckpt")
+              streaming.StreamingTwins.drain(scored.writeStream
                 .foreachBatch {
                   (df: DataFrame, _: Long) =>
                     df.groupBy(col("s"), col("y"))
                       .agg(count(lit(1)).as("n"))
                       .write.mode("append").parquet(outDir)
-                }.start()
-              try q.processAllAvailable() finally q.stop()
+                })
               val landed = spark.read.parquet(outDir)
                 .groupBy(col("s")).agg(
                   sum(when(col("y") === 1, col("n"))

@@ -443,11 +443,11 @@ object AnnOps {
     (codes, cent1, subs)
   }
 
-  /** Per-JVM ANN index store — the "index build vs query" split a
+  /** Run-shared ANN index store — the "index build vs query" split a
     * production vector store has anyway. Trained artifacts (IVF cell
     * centroids + assignment, PQ codebooks + codes, residual variants)
-    * are built ONCE per corpus directory, materialized to parquet in a
-    * JVM-scoped temp dir, and every later query in the run reads the
+    * are built ONCE per corpus directory, materialized to parquet
+    * under the store root, and every later query in the run reads the
     * written index instead of retraining (round-7 verdict: E6/E7/E8
     * each retrained an identical-shape codebook — 3× the suite's
     * heaviest cost). Parquet rather than persist() because (a) the
@@ -456,27 +456,10 @@ object AnnOps {
     * lifecycle is independent of any one query's cache. Stored columns
     * are integral (longs / arrays of longs) or IEEE doubles — both
     * round-trip parquet bit-exactly, so the oracle hashes are
-    * unchanged. */
-  private object AnnIndexStore {
-    private def root(spark: SparkSession) =
-      graft.sources.StoreRoot.resolve(spark, "graft-ann-index")
-    private val built = scala.collection.concurrent.TrieMap.empty[String, Unit]
-    /** Build-once-read-many: first call for `key` runs `build` and
-      * writes each named relation; every call returns parquet readers
-      * over the written index. The cache keys on the RESOLVED dir so a
-      * mid-JVM `graft.store.root` change builds fresh under the new
-      * root instead of reusing the old one. */
-    def get(spark: SparkSession, key: String, names: Seq[String])
-        (build: => Seq[DataFrame]): Seq[DataFrame] = {
-      val dir = root(spark).resolve(key)
-      built.getOrElseUpdate(dir.toString, {
-        names.zip(build).foreach { case (n, df) =>
-          df.write.mode("overwrite").parquet(dir.resolve(n).toString)
-        }
-      })
-      names.map(n => spark.read.parquet(dir.resolve(n).toString))
-    }
-  }
+    * unchanged. Build-once and atomic publication are the shared
+    * [[graft.sources.ArtifactStore]]'s. */
+  private val AnnIndexStore =
+    new graft.sources.ArtifactStore("graft-ann-index")
 
   private def indexKey(sfDir: String): String =
     sfDir.replaceAll("[^A-Za-z0-9.]", "_")

@@ -148,7 +148,7 @@ object DedupOps {
     * of the bench suite — and at 100 TB, six redundant corpus scans
     * per audit batch). Instead, the candidate-pair relation and the
     * connected-component labels are each built ONCE per corpus per
-    * run, written to parquet in a JVM-scoped temp dir, and every
+    * run, written to parquet under the store root, and every
     * later consumer reads the written relation — the index-build /
     * index-consume split a production dedup service has anyway (the
     * D13 `BandIndex` is the same split one level lower, for
@@ -158,18 +158,8 @@ object DedupOps {
     * columns are BIGINTs plus `est_jaccard` (an exact k/128 double —
     * parquet round-trips doubles bit-exactly), so every consumer's
     * oracle hash is unchanged. */
-  private object DedupIndexStore {
-    private def root(spark: SparkSession) =
-      graft.sources.StoreRoot.resolve(spark, "graft-dedup-index")
-    private val built = scala.collection.concurrent.TrieMap.empty[String, Unit]
-    def get(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-      val dir = root(spark).resolve(key)
-      built.getOrElseUpdate(dir.toString, {
-        build.write.mode("overwrite").parquet(dir.toString)
-      })
-      spark.read.parquet(dir.toString)
-    }
-  }
+  private val DedupIndexStore =
+    new graft.sources.ArtifactStore("graft-dedup-index")
 
   private def storeKey(sfDir: String): String =
     sfDir.replaceAll("[^A-Za-z0-9.]", "_")

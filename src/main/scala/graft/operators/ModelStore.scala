@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,16 +28,10 @@ import org.apache.spark.sql.functions._
   * hash-match whether the Spark side trained in-plan or read the
   * store.
   *
-  * Publication is ATOMIC (write to a sibling temp dir, rename into
-  * place): two JVMs sharing a root that both find an artifact
-  * missing race only on the rename — first committer wins, the loser
-  * discards its bit-identical copy — and a reader can never scan a
-  * half-written dir because `_SUCCESS` is already inside the temp
-  * dir when it moves (readers additionally gate on the marker, see
-  * [[awaitComplete]]). A writer crash leaves either an orphan temp
-  * dir no reader resolves, or a half-complete KEY (e.g. `gbt`'s
-  * model published, stumps not) that the all-names-complete check
-  * rebuilds on the next access — spec-pinned torn-state recovery.
+  * Publication and torn-state recovery are the shared
+  * [[graft.sources.ArtifactStore]]'s (atomic rename, `_SUCCESS`
+  * gate): a half-complete KEY (e.g. `gbt`'s model published, stumps
+  * not) rebuilds only its missing artifact — spec-pinned.
   *
   * Four GBT artifacts (they differ in TRAINING RELATION, not shape):
   *  - `gbt`    — the full-corpus B91 model row (B93/B96/B99 batch
@@ -59,174 +51,12 @@ import org.apache.spark.sql.functions._
   */
 object ModelStore {
 
-  private def root(spark: SparkSession) =
-    graft.sources.StoreRoot.resolve(spark, "graft-models")
-  private val built = scala.collection.concurrent.TrieMap.empty[String, Unit]
-
-  /** Age gate for the orphaned-`.trash` sweep: 10 minutes — orders of
-    * magnitude above any heal's two-rename flicker, far below the
-    * lifetime of a shared root (the spec exercises both arms by
-    * back-dating a planted orphan's mtime). */
-  private val trashSweepAgeMs: Long = 10L * 60 * 1000
+  private val store = new graft.sources.ArtifactStore("graft-models")
 
   /** Test hook: forget which keys this JVM has built, simulating a
     * process restart against the same store root (the torn-state
     * recovery spec uses it; production code never calls this). */
-  private[graft] def forgetBuiltForTests(): Unit = built.clear()
-
-  private def get(spark: SparkSession, key: String, names: Seq[String])
-      (build: => Seq[DataFrame]): Seq[DataFrame] = {
-    val dir = root(spark).resolve(key)
-    built.getOrElseUpdate(dir.toString, {
-      // sweep orphaned `.trash` siblings first (a writer crashed
-      // between the heal's move-aside and move-back — the window
-      // publish documents), AGE-GATED (r16 advisor): a concurrent
-      // JVM's in-flight heal legitimately parks a COMPLETE artifact
-      // under a .trash name for the instant between its move-aside
-      // and move-back, and sweeping during that flicker would make
-      // the move-back fail and force a spurious rebuild. A parked
-      // heal lives milliseconds; only .trash dirs older than the
-      // gate (by mtime — the nanoTime suffix is not comparable
-      // across JVMs) are genuinely orphaned crash residue, which is
-      // what leaks a full artifact copy per crash on a long-lived
-      // shared root (r16 review) and is all this sweep collects.
-      if (Files.exists(dir)) {
-        // "now" is the STORE's own clock, not the local one (r17
-        // advisor): on a shared root written by several machines, the
-        // .trash mtimes were assigned by the filesystem backing the
-        // root — comparing them against the local wall clock mis-ages
-        // a just-parked in-flight heal when skew exceeds the gate, and
-        // sweeping it forces the spurious rebuild the gate exists to
-        // prevent. A probe file created under the root reads back the
-        // store's idea of "now"; local time is only the fallback when
-        // the root is unwritable (then the sweep can't delete either).
-        // IOException ONLY (r18 advisor): a Throwable catch here would
-        // mask interrupts and fatal JVM errors behind a silent
-        // wall-clock fallback.
-        val storeNowMs: Long = {
-          val probe = dir.resolve(s".clockprobe${System.nanoTime()}")
-          try {
-            Files.createFile(probe)
-            Files.getLastModifiedTime(probe).toMillis
-          } catch { case _: java.io.IOException => System.currentTimeMillis() }
-          finally {
-            try Files.deleteIfExists(probe)
-            catch { case _: java.io.IOException => () }
-            ()
-          }
-        }
-        val cutoffMs = storeNowMs - trashSweepAgeMs
-        val kids = Files.list(dir)
-        // stale `.clockprobe*` files ride the same age-gated sweep as
-        // `.trash` (r18 advisor: a crash between createFile and the
-        // finally's delete stranded them forever — the gate keeps a
-        // LIVE probe, which exists for milliseconds, untouchable)
-        try kids.filter { p =>
-            val n = p.getFileName.toString
-            n.contains(".trash") || n.startsWith(".clockprobe")
-          }
-          .filter { p =>
-            (try Files.getLastModifiedTime(p).toMillis
-             catch { case _: java.io.IOException => Long.MaxValue }) < cutoffMs
-          }
-          .forEach(p => graft.sources.StoreRoot.deleteRecursively(p))
-        finally kids.close()
-      }
-      // an artifact already persisted under a SHARED root (another
-      // JVM trained it — the H20 cluster story) is reused as-is, the
-      // IvmStateStore/SnapshotTable discipline: training is
-      // deterministic, so reuse ≡ retrain. A HALF-complete key (a
-      // writer crashed between two artifact publishes) rebuilds: the
-      // names already published are kept (first-committer-wins), the
-      // missing ones land fresh.
-      val complete = names.forall(n =>
-        Files.exists(dir.resolve(n).resolve("_SUCCESS")))
-      if (!complete) {
-        names.zip(build).foreach { case (n, df) =>
-          publish(df, dir.resolve(n))
-        }
-      }
-    })
-    names.map { n =>
-      val d = dir.resolve(n)
-      awaitComplete(d)
-      spark.read.parquet(d.toString)
-    }
-  }
-
-  /** Publish one artifact atomically: write to a sibling temp dir,
-    * then rename into place. The rename is the only shared-root race
-    * point — it either installs a COMPLETE dir (Spark wrote
-    * `_SUCCESS` inside the temp dir before the move) or fails
-    * because a concurrent writer already installed its bit-identical
-    * copy, in which case ours is discarded. Also makes the intra-JVM
-    * TrieMap race (getOrElseUpdate may evaluate a block twice)
-    * harmless. */
-  private def publish(df: DataFrame, target: Path): Unit = {
-    if (Files.exists(target.resolve("_SUCCESS"))) return // already won
-    // a target that exists WITHOUT the marker is torn garbage (a
-    // crashed non-atomic writer — e.g. a pre-atomic-protocol build):
-    // under this protocol a published dir appears atomically with
-    // _SUCCESS already inside, so healing is safe and required — the
-    // rename below would otherwise fail forever (r15 review). The
-    // heal MOVES the dir aside atomically instead of deleting in
-    // place (r15 advisor): a concurrent JVM's publish may land a
-    // COMPLETE artifact between the marker check above and this
-    // branch, and a recursive delete would destroy it under a reader
-    // that already passed awaitComplete. After the move-aside the
-    // marker is re-checked on the moved dir — if it turns out
-    // complete (we lost exactly that race) it is moved straight
-    // back and this writer's copy is discarded. Residual multi-JVM
-    // window: a reader mid-scan during the aside-and-back flicker
-    // can see a transiently missing file (bounded by two renames);
-    // a crash between the two renames leaves the complete artifact
-    // under the .trash name and the next access rebuilds — nothing
-    // is recursively deleted that could have been complete.
-    if (Files.exists(target)) {
-      val trash = target.resolveSibling(
-        target.getFileName.toString + s".trash${System.nanoTime()}")
-      try Files.move(target, trash, StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileSystemException => () }
-      if (Files.exists(trash.resolve("_SUCCESS"))) {
-        try {
-          Files.move(trash, target, StandardCopyOption.ATOMIC_MOVE)
-          return // the concurrent publish was complete — reinstalled
-        } catch {
-          case _: java.nio.file.FileSystemException =>
-            // yet another writer renamed in meanwhile; copies are
-            // bit-identical, ours goes
-            graft.sources.StoreRoot.deleteRecursively(trash)
-            if (Files.exists(target.resolve("_SUCCESS"))) return
-        }
-      } else if (Files.exists(trash))
-        graft.sources.StoreRoot.deleteRecursively(trash)
-    }
-    val tmp = target.resolveSibling(
-      target.getFileName.toString + s".tmp${System.nanoTime()}")
-    df.write.mode("errorifexists").parquet(tmp.toString)
-    try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case e: java.nio.file.FileSystemException =>
-        graft.sources.StoreRoot.deleteRecursively(tmp)
-        // the rename legitimately fails only because a concurrent
-        // publish landed first; anything else must surface
-        if (!Files.exists(target.resolve("_SUCCESS"))) throw e
-    }
-  }
-
-  /** Readers gate on `_SUCCESS` instead of scanning unconditionally:
-    * under a shared root another JVM may still be publishing — the
-    * marker appears exactly when the artifact is complete (atomic
-    * rename), so a short wait replaces a scan of a half-state. In a
-    * single JVM the marker is always present by the time this runs. */
-  private def awaitComplete(d: Path): Unit = {
-    val deadlineNs = System.nanoTime() + 120L * 1000 * 1000 * 1000
-    while (!Files.exists(d.resolve("_SUCCESS"))) {
-      require(System.nanoTime() < deadlineNs,
-        s"model artifact $d incomplete after 120 s — no writer published it")
-      Thread.sleep(100)
-    }
-  }
+  private[graft] def forgetBuiltForTests(): Unit = store.forgetBuilt()
 
   private def ckey(sfDir: String): String =
     sfDir.replaceAll("[^A-Za-z0-9.]", "_")
@@ -259,7 +89,7 @@ object ModelStore {
   }
 
   private def gbtAll(spark: SparkSession, sfDir: String): Seq[DataFrame] =
-    get(spark, "gbt_" + ckey(sfDir), Seq("model", "stumps")) {
+    store.get(spark, "gbt_" + ckey(sfDir), Seq("model", "stumps")) {
       withBase(spark, sfDir) { b =>
         // ONE training pass serves both artifacts: the full per-round
         // stump table (threshold/leaves + the SSE trajectory B101's
@@ -285,7 +115,7 @@ object ModelStore {
 
   private def gbtHoldoutAll(spark: SparkSession,
       sfDir: String): Seq[DataFrame] =
-    get(spark, "gbtho_" + ckey(sfDir), Seq("model")) {
+    store.get(spark, "gbtho_" + ckey(sfDir), Seq("model")) {
       withBase(spark, sfDir) { b =>
         // fold 0 of the shared content hash = test, so the 80% train
         // split is exactly fold ≠ 0 (holdoutRows' split column is the
@@ -301,7 +131,7 @@ object ModelStore {
     gbtHoldoutAll(spark, sfDir).head
 
   private def gbtCvAll(spark: SparkSession, sfDir: String): Seq[DataFrame] =
-    get(spark, "gbtcv_" + ckey(sfDir), Seq("wide")) {
+    store.get(spark, "gbtcv_" + ckey(sfDir), Seq("wide")) {
       withBase(spark, sfDir)(b =>
         Seq(Round13Ops.cvWideModelsFrom(b)))
     }
@@ -312,7 +142,7 @@ object ModelStore {
     gbtCvAll(spark, sfDir).head
 
   private def gbtLcAll(spark: SparkSession, sfDir: String): Seq[DataFrame] =
-    get(spark, "gbtlc_" + ckey(sfDir), Seq("wide")) {
+    store.get(spark, "gbtlc_" + ckey(sfDir), Seq("wide")) {
       withBase(spark, sfDir)(b =>
         Seq(Round13Ops.lcWideModelsFrom(b)))
     }
@@ -324,7 +154,7 @@ object ModelStore {
 
   private def forestAll(spark: SparkSession,
       sfDir: String): Seq[DataFrame] =
-    get(spark, "forest_" + ckey(sfDir),
+    store.get(spark, "forest_" + ckey(sfDir),
         Seq("levels", "leaf_scores")) {
       // ONE corpus pass serves all three forest readers: the facts
       // collapse to the bag-flagged sufficient-statistic cells, then
@@ -363,7 +193,7 @@ object ModelStore {
 
   private def forestCvAll(spark: SparkSession,
       sfDir: String): Seq[DataFrame] =
-    get(spark, "forestcv_" + ckey(sfDir), Seq("levels", "leaf_scores")) {
+    store.get(spark, "forestcv_" + ckey(sfDir), Seq("levels", "leaf_scores")) {
       withForestCells(spark, sfDir)(Round15Ops.forestCvArtifacts)
     }
 
@@ -377,7 +207,7 @@ object ModelStore {
 
   private def forestLcAll(spark: SparkSession,
       sfDir: String): Seq[DataFrame] =
-    get(spark, "forestlc_" + ckey(sfDir), Seq("levels", "leaf_scores")) {
+    store.get(spark, "forestlc_" + ckey(sfDir), Seq("levels", "leaf_scores")) {
       withForestCells(spark, sfDir)(Round15Ops.forestLcArtifacts)
     }
 
@@ -446,15 +276,15 @@ object ModelStore {
       // ~1/3 of the build row's wall.
       val _ = joint
       Overlap.unitLegs(Seq(
-        () => { get(spark, s"gbt_$sk", Seq("model", "stumps")) {
+        () => { store.get(spark, s"gbt_$sk", Seq("model", "stumps")) {
           Seq(joint._1.filter(col("g") === "full").drop("g"),
             joint._2.filter(col("g") === "full").drop("g"))
         }; () },
-        () => { get(spark, s"gbtho_$sk", Seq("model")) {
+        () => { store.get(spark, s"gbtho_$sk", Seq("model")) {
           Seq(joint._1.filter(col("g") === "ho").drop("g"))
         }; () },
-        () => { get(spark, s"gbtcv_$sk", Seq("wide"))(Seq(slice("cv"))); () },
-        () => { get(spark, s"gbtlc_$sk", Seq("wide"))(Seq(slice("lc"))); () }))
+        () => { store.get(spark, s"gbtcv_$sk", Seq("wide"))(Seq(slice("cv"))); () },
+        () => { store.get(spark, s"gbtlc_$sk", Seq("wide"))(Seq(slice("lc"))); () }))
     } finally { staged.foreach(_.unpersist()); () }
   }
 
@@ -486,10 +316,10 @@ object ModelStore {
       // store keys publish concurrently (r20; guide §2.6)
       val _ = joint
       Overlap.unitLegs(Seq(
-        () => { get(spark, s"forestcv_$sk", Seq("levels", "leaf_scores")) {
+        () => { store.get(spark, s"forestcv_$sk", Seq("levels", "leaf_scores")) {
           slice("c")
         }; () },
-        () => { get(spark, s"forestlc_$sk", Seq("levels", "leaf_scores")) {
+        () => { store.get(spark, s"forestlc_$sk", Seq("levels", "leaf_scores")) {
           slice("s")
         }; () }))
     } finally { staged.foreach(_.unpersist()); () }

@@ -456,21 +456,7 @@ object Round10Ops {
     * trained tokenizer IS a written artifact (its lifecycle is
     * independent of any query), and all stored columns are strings +
     * longs, so the write/read round-trip is bit-exact. */
-  private object BpeStore {
-    private def root(spark: SparkSession) =
-      graft.sources.StoreRoot.resolve(spark, "graft-bpe")
-    private val built = scala.collection.concurrent.TrieMap.empty[String, Unit]
-    def get(spark: SparkSession, key: String, names: Seq[String])
-        (build: => Seq[DataFrame]): Seq[DataFrame] = {
-      val dir = root(spark).resolve(key)
-      built.getOrElseUpdate(dir.toString, {
-        names.zip(build).foreach { case (n, df) =>
-          df.write.mode("overwrite").parquet(dir.resolve(n).toString)
-        }
-      })
-      names.map(n => spark.read.parquet(dir.resolve(n).toString))
-    }
-  }
+  private val BpeStore = new graft.sources.ArtifactStore("graft-bpe")
 
   /** (full 40-round merge table, segmentation snapshot per sweep
     * checkpoint) for the corpus at `sfDir`, from the run-shared store. */

@@ -154,10 +154,9 @@ object Round17Ops {
   private[graft] def runAnnIngest(spark: SparkSession, cemb: DataFrame,
       d: String): Unit = {
     val emb = cemb.select(col("vec_id"), col("v").as("embedding"))
-    val q = spark.readStream.schema(batchSchema)
+    graft.streaming.StreamingTwins.drain(spark.readStream.schema(batchSchema)
       .option("maxFilesPerTrigger", 1).parquet(s"$d/batch_*")
       .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$d/ckpt")
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          _: Long) =>
@@ -182,9 +181,7 @@ object Round17Ops {
           graft.sources.SegmentStore.append(
             scorePairs(cand, emb), s"$d/edges")
           graft.sources.SegmentStore.append(bB, s"$d/buckets")
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
   }
 
   /** The streamed ingest: stage the new-vector micro-batches, run the
@@ -505,10 +502,9 @@ object Round17Ops {
   private[graft] def runCapIngest(spark: SparkSession, cemb: DataFrame,
       d: String): Unit = {
     val emb = cemb.select(col("vec_id"), col("v").as("embedding"))
-    val q = spark.readStream.schema(batchSchema)
+    graft.streaming.StreamingTwins.drain(spark.readStream.schema(batchSchema)
       .option("maxFilesPerTrigger", 1).parquet(s"$d/batch_*")
       .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$d/ckpt")
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          _: Long) =>
@@ -537,9 +533,7 @@ object Round17Ops {
             scorePairs(cand, emb), s"$d/edges")
           graft.sources.SegmentStore.append(bB, s"$d/buckets")
           graft.sources.SegmentStore.append(bReps, s"$d/reps")
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
   }
 
   private def ingestCapSegments(spark: SparkSession,

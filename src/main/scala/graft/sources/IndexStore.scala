@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -18,10 +16,15 @@ import org.apache.spark.sql.functions._
   * Layout: an LSM-flavored segment list. Each segment is a Spark
   * bucketed table (`bucketBy(buckets, keyCol)`, sorted by the key)
   * with its data under `<path>/seg_<k>`; the live segment set is the
-  * MANIFEST file (one segment id per line), updated by atomic rename
-  * — a reader never observes a half-written segment list, and a
-  * crashed refresh leaves at worst an orphaned directory invisible to
-  * the manifest.
+  * current snapshot of the store's [[CommitLog]] (one segment id per
+  * line). A writer claims its segment id by creating `seg_<k>` before
+  * writing it, so no two writers ever write one segment, and commits
+  * the new list as version base + 1 by put-if-absent: a reader never
+  * observes a half-written list, the loser of two concurrent
+  * refreshes gets [[CommitConflict]] and removes its own segment, and
+  * a crashed refresh leaves at worst a claimed directory no snapshot
+  * lists (never reused, never vacuumed — nothing tells it from a live
+  * writer's).
   *
   * Probe semantics: a batch joins each live segment separately and
   * the per-segment results union. Each segment scan satisfies the
@@ -53,8 +56,8 @@ import org.apache.spark.sql.functions._
   *   100 TB the same two measured numbers (δ from a probe sample, C
   *   from segment bytes) parameterize the same bound. */
 /** @param keepSnapshots TIME-TRAVEL retention (round 10): every
-  *   manifest write is also recorded as an immutable snapshot file
-  *   `MANIFEST.v<k>`; the last `keepSnapshots` versions stay readable
+  *   commit is an immutable snapshot file `MANIFEST.v<k>`; the last
+  *   `keepSnapshots` versions stay readable
   *   via [[IndexStore.probeAsOf]]/[[IndexStore.segmentsAsOf]]. Segment
   *   DATA is vacuumed only once no retained snapshot references it —
   *   so a compaction no longer destroys the pre-compaction view until
@@ -72,10 +75,6 @@ final class IndexStore(
     maxSegments: Int = 0,
     keepSnapshots: Int = 4) {
 
-  require(keepSnapshots >= 1, "must retain at least the current snapshot")
-
-  private def manifest: Path = Paths.get(path, "MANIFEST")
-
   // the catalog name carries the store's location: a session-wide
   // catalog entry shared by two stores of one name at different roots
   // would leave the first store reading the second one's segments
@@ -84,83 +83,68 @@ final class IndexStore(
 
   private def tableName(seg: Int): String = s"${name}_${pathTag}_seg$seg"
 
-  private def readSegList(p: Path): Seq[Int] =
-    Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty).map(_.toInt)
+  private val log = new CommitLog(Paths.get(path), keepSnapshots,
+    body => segList(body).map(_.toString), s => dropSegment(s.toInt))
+
+  private def segList(body: String): Seq[Int] =
+    body.split("\n").toSeq.filter(_.nonEmpty).map(_.toInt)
 
   /** Live segment ids, oldest first (empty = store not created). */
-  def segments: Seq[Int] =
-    if (!Files.exists(manifest)) Seq.empty
-    else readSegList(manifest)
-
-  private def listNames: Seq[String] =
-    if (!Files.exists(Paths.get(path))) Seq.empty
-    else {
-      val s = Files.list(Paths.get(path))
-      try s.iterator().asScala.map(_.getFileName.toString).toSeq
-      finally s.close()
-    }
+  def segments: Seq[Int] = current._2
 
   /** Retained snapshot versions, oldest first. The last one is always
-    * the current manifest's content. */
-  def snapshots: Seq[Int] =
-    listNames.flatMap(n =>
-      "^MANIFEST\\.v(\\d+)$".r.findFirstMatchIn(n).map(_.group(1).toInt))
-      .sorted
+    * the current segment list. */
+  def snapshots: Seq[Int] = log.versions
 
   /** The segment list as of a retained snapshot version. */
   def segmentsAsOf(version: Int): Seq[Int] = {
-    val p = Paths.get(path, s"MANIFEST.v$version")
-    require(Files.exists(p),
+    val body = log.read(version)
+    require(body.isDefined,
       s"snapshot v$version of $name is not retained (have: $snapshots)")
-    readSegList(p)
+    segList(body.get)
   }
 
-  /** Every segment id referenced by any retained snapshot or the
-    * current manifest — the set vacuum must NOT touch. */
-  private def referencedSegs: Set[Int] =
-    (snapshots.flatMap(segmentsAsOf) ++ segments).toSet
-
-  /** Segment ids present on disk (live + not-yet-vacuumed). */
+  /** Segment ids present on disk (live, retained or claimed). */
   private def segsOnDisk: Seq[Int] =
-    listNames.flatMap(n =>
+    StoreRoot.listNames(Paths.get(path)).flatMap(n =>
       "^seg_(\\d+)$".r.findFirstMatchIn(n).map(_.group(1).toInt)).sorted
 
-  private def writeManifest(segs: Seq[Int]): Unit = {
-    Files.createDirectories(Paths.get(path))
-    // 1. record the snapshot (immutable, atomically placed)
-    val v = snapshots.lastOption.getOrElse(0) + 1
-    val tmpV = Paths.get(path, s"MANIFEST.tmp_v${System.nanoTime()}")
-    Files.writeString(tmpV, segs.mkString("", "\n", "\n"))
-    Files.move(tmpV, Paths.get(path, s"MANIFEST.v$v"),
-      StandardCopyOption.ATOMIC_MOVE)
-    // 2. move the current pointer
-    val tmp = Paths.get(path, s"MANIFEST.tmp${System.nanoTime()}")
-    Files.writeString(tmp, segs.mkString("", "\n", "\n"))
-    Files.move(tmp, manifest, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    // 3. expire snapshots beyond the retention window...
-    snapshots.dropRight(keepSnapshots)
-      .foreach(old => Files.delete(Paths.get(path, s"MANIFEST.v$old")))
-    // 4. ...then vacuum segment data no retained snapshot can reach
-    val refs = referencedSegs
-    segsOnDisk.filterNot(refs.contains).foreach { s =>
-      spark.sql(s"DROP TABLE IF EXISTS ${tableName(s)}")
-      deleteRecursively(Paths.get(path, s"seg_$s"))
-    }
+  private def dropSegment(seg: Int): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS ${tableName(seg)}")
+    StoreRoot.deleteRecursively(Paths.get(path, s"seg_$seg"))
   }
 
-  private def writeSegment(df: DataFrame, seg: Int): Unit =
-    df.write.bucketBy(buckets, keyCol).sortBy(keyCol)
-      .option("path", s"$path/seg_$seg")
-      .mode("overwrite")
+  /** Claim a fresh segment id past every one on disk or in `base`, write
+    * `df` as that segment and commit `segs(id)` over version `base`. A
+    * failed write or a lost commit removes the segment again. */
+  private def commitSegment(base: (Int, Seq[Int]), df: DataFrame)
+      (segs: Int => Seq[Int]): Unit = {
+    Files.createDirectories(Paths.get(path))
+    val seg = Iterator.from((segsOnDisk ++ base._2 :+ -1).max + 1)
+      .find(i => CommitLog.claim(Paths.get(path, s"seg_$i"))).get
+    // the table lives one level down: an overwrite-mode table write
+    // deletes and recreates its location, which must not reopen the
+    // claim
+    try df.write.bucketBy(buckets, keyCol).sortBy(keyCol)
+      .option("path", s"$path/seg_$seg/data").mode("overwrite")
       .saveAsTable(tableName(seg))
+    catch { case e: Throwable => dropSegment(seg); throw e }
+    try log.commit(base._1, segs(seg).mkString("", "\n", "\n"))
+    catch { case e: CommitConflict => dropSegment(seg); throw e }
+  }
+
+  /** The current (version, segment list). */
+  private def current: (Int, Seq[Int]) = {
+    val (v, body) = log.current
+    (v, body.fold(Seq.empty[Int])(segList))
+  }
 
   /** Create the store with its first segment (errors if it exists —
     * a standing index is created once, then refreshed). */
   def create(df: DataFrame): Unit = {
-    require(segments.isEmpty, s"index store $name already exists")
-    writeSegment(df, 0)
-    writeManifest(Seq(0))
+    val cur = current
+    require(cur._2.isEmpty, s"index store $name already exists")
+    commitSegment(cur, df)(Seq(_))
   }
 
   /** Append a new segment — O(batch) write, standing segments are
@@ -169,30 +153,26 @@ final class IndexStore(
     * probe results are unaffected (compact() is result-neutral,
     * IndexStoreSpec), only the refresh pays the standing-data
     * rewrite, exactly when the √(2C/δ) rule says amortizing it beats
-    * per-probe fan-out. */
+    * per-probe fan-out. Ids never reuse a retained-but-not-live
+    * segment's (time travel) or a claimed one's. */
   def refresh(df: DataFrame): Unit = {
-    val segs = segments
-    require(segs.nonEmpty, s"index store $name not created")
-    // ids never reuse a retained-but-not-live segment's (time travel)
-    val next = (segsOnDisk ++ segs).max + 1
-    writeSegment(df, next)
-    writeManifest(segs :+ next)
+    val cur = current
+    require(cur._2.nonEmpty, s"index store $name not created")
+    commitSegment(cur, df)(cur._2 :+ _)
     if (maxSegments > 0 && segments.size >= maxSegments) compact()
   }
 
   /** Merge all live segments into one — pays one rewrite of the
     * standing data to return probe fan-out to a single join. The
     * replaced segments are NOT deleted here: retained snapshots may
-    * still reference them (time travel); writeManifest's vacuum
-    * removes each one once the last referencing snapshot expires. */
+    * still reference them (time travel); the commit's vacuum removes
+    * each one once the last referencing snapshot expires. */
   def compact(): Unit = {
-    val segs = segments
-    require(segs.nonEmpty, s"index store $name not created")
-    if (segs.size == 1) return
-    val next = (segsOnDisk ++ segs).max + 1
-    writeSegment(segs.map(s => spark.table(tableName(s)))
-      .reduce(_ unionByName _), next)
-    writeManifest(Seq(next))
+    val cur = current
+    require(cur._2.nonEmpty, s"index store $name not created")
+    if (cur._2.size == 1) return
+    commitSegment(cur, cur._2.map(s => spark.table(tableName(s)))
+      .reduce(_ unionByName _))(Seq(_))
   }
 
   /** All live segments as DataFrames (bucketed scans). */
@@ -224,17 +204,6 @@ final class IndexStore(
     * (spec-pinned in IndexStoreSpec). */
   def segmentsAdded(vFrom: Int, vTo: Int): Seq[Int] = {
     val from = segmentsAsOf(vFrom).toSet
-    // a compaction's merged segment carries no new data: it is the
-    // union of from-segments it replaced — detect "replaces only"
-    // by construction: refresh appends STRICTLY increasing ids and
-    // compact writes one id greater than everything it merged, so a
-    // segment in vTo is NEW DATA iff its id exceeds vFrom's max AND
-    // it was written by refresh (single-segment append commits).
-    // The store cannot distinguish the two after the fact from ids
-    // alone, so the contract is list-level: every segment in vTo
-    // not present in vFrom. Callers consuming data increments use
-    // probeDelta, which is exact for refresh-only histories and
-    // conservative (re-reads) across compactions.
     segmentsAsOf(vTo).filterNot(from.contains)
   }
 
@@ -261,12 +230,6 @@ final class IndexStore(
   def drop(): Unit = {
     (segsOnDisk ++ segments).distinct
       .foreach(s => spark.sql(s"DROP TABLE IF EXISTS ${tableName(s)}"))
-    deleteRecursively(Paths.get(path))
+    StoreRoot.deleteRecursively(Paths.get(path))
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-    }
 }

@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
@@ -58,33 +56,17 @@ object SegmentStore {
       s"${System.nanoTime()}_${java.util.UUID.randomUUID.toString.take(8)}"
     val tmp = parent.resolve(s".stage_$nonce")
     df.write.parquet(tmp.toString)
-    commit(tmp, parent.resolve(s"seg_$nonce"))
+    // the commit: rename the staged sibling into the committed
+    // namespace (one directory, so one filesystem)
+    Files.move(tmp, parent.resolve(s"seg_$nonce"),
+      StandardCopyOption.ATOMIC_MOVE)
   }
-
-  /** Rename the staged dir into the committed namespace. */
-  private def commit(tmp: Path, target: Path): Unit =
-    try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.AtomicMoveNotSupportedException =>
-        // cross-device fallback (never on one /tmp filesystem; an
-        // object store replaces this whole commit with a manifest
-        // swap) — plain move is still a metadata op on one mount
-        Files.move(tmp, target)
-    }
 
   /** The committed segment paths, one explicit listing (sorted for a
     * deterministic read plan; order does not affect results). */
-  private def committedSegments(dir: String): Seq[String] = {
-    val p = Paths.get(dir)
-    if (!Files.isDirectory(p)) Seq.empty
-    else {
-      val s = Files.list(p)
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("seg_"))
-        .map(_.toString).toSeq.sorted
-      finally s.close()
-    }
-  }
+  private def committedSegments(dir: String): Seq[String] =
+    StoreRoot.listNames(Paths.get(dir)).filter(_.startsWith("seg_"))
+      .map(n => Paths.get(dir, n).toString).sorted
 
   /** Snapshot read: every fully-committed segment, none in flight.
     * Requires ≥ 1 committed segment — a store this engine reads was

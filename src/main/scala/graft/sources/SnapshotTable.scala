@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,11 +14,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   *   - data files are immutable parquet directories, one per (commit,
   *     bucket); a row lives in bucket pmod(hash(key), buckets)
-  *   - a snapshot is a manifest mapping bucket → data dir; every
-  *     commit writes an immutable `MANIFEST.v<k>` plus the current
-  *     pointer, both by atomic rename (a reader never sees a half
-  *     list; a crashed commit leaves at worst an orphan dir invisible
-  *     to every manifest)
+  *   - a snapshot is a manifest mapping bucket → data dir, committed
+  *     through the store's [[CommitLog]]: an immutable `MANIFEST.v<k>`
+  *     placed by put-if-absent, the newest one current. Every write
+  *     (create, MERGE, COMPACT) is stage-then-publish: the Spark job
+  *     writes under `staged/`, invisible to readers and vacuum; publish
+  *     claims `data/c<k>` (k = base + 1) by creating it, moves the
+  *     staged dirs in and commits `MANIFEST.v<k>`. A writer whose base
+  *     is no longer current finds either taken and gets
+  *     [[CommitConflict]] — never a silently dropped commit
   *   - MERGE (the A20b upsert) rewrites ONLY the buckets its keys
   *     touch; untouched buckets' files are SHARED between snapshots
   *     by reference — the pre-merge view stays readable at O(0) extra
@@ -28,13 +30,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   - COMPACT rewrites the live layout into one fresh commit;
   *     result-neutral by construction (spec-pinned), retained older
   *     snapshots keep reading the pre-compaction files
-  *   - VACUUM (inside every commit) deletes data dirs referenced by
-  *     NO retained snapshot — reference counting at bucket-dir
-  *     granularity, so a dir shared by five snapshots survives until
-  *     the last one expires
+  *   - VACUUM (inside every commit) deletes the data dirs the expiring
+  *     snapshots reference and no retained one does — reference
+  *     counting at bucket-dir granularity, so a dir shared by five
+  *     snapshots survives until the last one expires, and a concurrent
+  *     writer's unpublished dirs are never touched
   *
-  * Manifest format (`MANIFEST.v<k>` and the `MANIFEST` pointer carry
-  * the same body): one `<bucket> <data dir>` line per live bucket plus
+  * Manifest format: one `<bucket> <data dir>` line per live bucket plus
   * one `schema <StructType json>` line, the table schema of that
   * snapshot (nullable, without the bucket column; a widening merge
   * appends the batch's new columns after the prior ones). Every read
@@ -67,26 +69,14 @@ final class SnapshotTable(
     buckets: Int = 4,
     keepSnapshots: Int = 3) {
 
-  require(keepSnapshots >= 1, "must retain at least the current snapshot")
-
-  private def manifest: Path = Paths.get(path, "MANIFEST")
-
-  private def listNames(dir: Path): Seq[String] =
-    if (!Files.exists(dir)) Seq.empty
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asScala.map(_.getFileName.toString).toSeq
-      finally s.close()
-    }
+  private val log = new CommitLog(Paths.get(path), keepSnapshots,
+    body => parse(body).refs.values, dropRef)
 
   /** Retained snapshot versions, oldest first. */
-  def snapshots: Seq[Int] =
-    listNames(Paths.get(path)).flatMap(n =>
-      "^MANIFEST\\.v(\\d+)$".r.findFirstMatchIn(n).map(_.group(1).toInt))
-      .sorted
+  def snapshots: Seq[Int] = log.versions
 
   /** Current snapshot version (0 = not created). */
-  def version: Int = snapshots.lastOption.getOrElse(0)
+  def version: Int = log.version
 
   /** One parsed manifest: bucket → data-dir refs and its schema line.
     * A manifest written before that line existed has none; its schema
@@ -94,12 +84,15 @@ final class SnapshotTable(
   private case class Snap(refs: Map[Int, String], line: Option[StructType]) {
     lazy val schema: StructType = line.getOrElse(spark.read
       .option("mergeSchema", "true").parquet(dirsOf(refs): _*).schema)
+    def body: String =
+      (refs.toSeq.sortBy(_._1).map { case (b, d) => s"$b $d" } :+
+        s"$SchemaTag${schema.json}").mkString("", "\n", "\n")
   }
 
   private val SchemaTag = "schema "
 
-  private def readSnap(p: Path): Snap = {
-    val (s, r) = Files.readAllLines(p).asScala.filter(_.nonEmpty)
+  private def parse(body: String): Snap = {
+    val (s, r) = body.split("\n").toSeq.filter(_.nonEmpty)
       .partition(_.startsWith(SchemaTag))
     Snap(r.map { line =>
       val Array(b, dir) = line.split(" ", 2)
@@ -108,18 +101,21 @@ final class SnapshotTable(
       DataType.fromJson(l.drop(SchemaTag.length)).asInstanceOf[StructType]))
   }
 
-  private def current: Snap =
-    if (!Files.exists(manifest)) Snap(Map.empty, None) else readSnap(manifest)
+  /** (version, snapshot) of the current snapshot. */
+  private def current: (Int, Snap) = {
+    val (v, body) = log.current
+    (v, body.fold(Snap(Map.empty, None))(parse))
+  }
 
   private def snapAsOf(v: Int): Snap = {
-    val p = Paths.get(path, s"MANIFEST.v$v")
-    require(Files.exists(p),
+    val body = log.read(v)
+    require(body.isDefined,
       s"snapshot v$v of $path is not retained (have: $snapshots)")
-    readSnap(p)
+    parse(body.get)
   }
 
   /** bucket → data-dir refs of the CURRENT snapshot (spec hook). */
-  def refs: Map[Int, String] = current.refs
+  def refs: Map[Int, String] = current._2.refs
 
   /** bucket → data-dir refs as of a retained snapshot. */
   def refsAsOf(v: Int): Map[Int, String] = snapAsOf(v).refs
@@ -127,69 +123,49 @@ final class SnapshotTable(
   /** Data dirs on disk, relative to `path` (spec hook for vacuum). */
   def dataDirsOnDisk: Set[String] = {
     val dataRoot = Paths.get(path, "data")
-    listNames(dataRoot).flatMap { commit =>
-      listNames(dataRoot.resolve(commit)).filter(_.startsWith("__b="))
-        .map(b => s"data/$commit/$b")
+    StoreRoot.listNames(dataRoot).flatMap { commit =>
+      StoreRoot.listNames(dataRoot.resolve(commit))
+        .filter(_.startsWith("__b=")).map(b => s"data/$commit/$b")
     }.toSet
+  }
+
+  /** Vacuum one bucket dir, and its commit dir once no bucket is left. */
+  private def dropRef(ref: String): Unit = {
+    val dir = Paths.get(path, ref)
+    StoreRoot.deleteRecursively(dir)
+    if (!StoreRoot.listNames(dir.getParent).exists(_.startsWith("__b=")))
+      StoreRoot.deleteRecursively(dir.getParent)
   }
 
   private def bucketed(df: DataFrame): DataFrame =
     df.withColumn("__b", pmod(hash(col(keyCol)), lit(buckets)))
 
-  /** Write `df`'s per-bucket dirs under `rel` (relative to the table
-    * root), clustered (see the class doc); returns the refs produced
-    * (only non-empty buckets get a dir). */
-  private def writeDataAt(df: DataFrame, rel: String): Map[Int, String] = {
-    val dir = s"$path/$rel"
+  /** Write `df`'s per-bucket dirs under a fresh `staged/` dir,
+    * clustered (see the class doc), as the next snapshot over `base`
+    * carrying `carried`; only non-empty buckets get a dir. */
+  private def stage(base: Int, carried: Map[Int, String], df: DataFrame,
+      schema: StructType): StagedMerge = {
+    val rel = s"staged/s${java.util.UUID.randomUUID}"
     bucketed(df).hint("rebalance", col("__b"))
       .sortWithinPartitions(col("__b"), col(keyCol))
-      .write.partitionBy("__b").mode("errorifexists").parquet(dir)
-    (0 until buckets).flatMap { b =>
+      .write.partitionBy("__b").mode("errorifexists").parquet(s"$path/$rel")
+    val staged = (0 until buckets).flatMap { b =>
       val d = s"$rel/__b=$b"
       if (Files.exists(Paths.get(path, d))) Some(b -> d) else None
     }.toMap
+    new StagedMerge(base, carried, rel, staged, schema)
   }
 
-  /** Write `df` as commit `c`'s per-bucket dirs. */
-  private def writeData(df: DataFrame, c: Int): Map[Int, String] =
-    writeDataAt(df, s"data/c$c")
-
-  /** Commit `snap` as the next version: manifest, pointer, expiry,
-    * vacuum. */
-  private def commitManifest(snap: Snap): Unit = {
-    val v = version + 1
-    val body = (snap.refs.toSeq.sortBy(_._1).map { case (b, d) => s"$b $d" } :+
-      s"$SchemaTag${snap.schema.json}").mkString("", "\n", "\n")
-    // 1. the immutable snapshot, atomically placed
-    val tmpV = Paths.get(path, s"MANIFEST.tmp_v${System.nanoTime()}")
-    Files.writeString(tmpV, body)
-    Files.move(tmpV, Paths.get(path, s"MANIFEST.v$v"),
-      StandardCopyOption.ATOMIC_MOVE)
-    // 2. the current pointer
-    val tmp = Paths.get(path, s"MANIFEST.tmp${System.nanoTime()}")
-    Files.writeString(tmp, body)
-    Files.move(tmp, manifest, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    // 3. expire snapshots beyond retention...
-    snapshots.dropRight(keepSnapshots)
-      .foreach(old => Files.delete(Paths.get(path, s"MANIFEST.v$old")))
-    // 4. ...then vacuum data dirs no retained snapshot references
-    val live: Set[String] =
-      snapshots.flatMap(refsAsOf(_).values).toSet ++ refs.values
-    dataDirsOnDisk.filterNot(live.contains).foreach { d =>
-      deleteRecursively(Paths.get(path, d))
-      // drop the commit dir once its last bucket is gone
-      val parent = Paths.get(path, d).getParent
-      if (listNames(parent).forall(n => !n.startsWith("__b=")))
-        deleteRecursively(parent)
-    }
-  }
+  /** Publish `s`; on a conflict its staged write is discarded. */
+  private def commit(s: StagedMerge): Unit =
+    try s.publish()
+    catch { case e: CommitConflict => s.discard(); throw e }
 
   /** Create the table (errors if it exists). */
   def create(df: DataFrame): Unit = {
     require(version == 0, s"snapshot table $path already exists")
     Files.createDirectories(Paths.get(path))
-    commitManifest(Snap(writeData(df, 1), Some(nullable(df.schema))))
+    commit(stage(0, Map.empty, df, nullable(df.schema)))
   }
 
   /** MERGE (A20b upsert): rows in `updates` replace current rows with
@@ -207,19 +183,17 @@ final class SnapshotTable(
     * reaches 0. A key in both sets lands as the update. Still
     * copy-on-write at bucket granularity: only buckets containing an
     * update OR delete key rewrite; a bucket whose rows all vanish gets
-    * no data dir and drops out of the new manifest. */
-  def merge(updates: DataFrame, deletes: Option[DataFrame]): Unit = {
-    val cur = created
-    val schema = widened(cur.schema, updates)
-    val (touched, upserted) = upsertPlan(cur, updates, deletes)
-    commitManifest(Snap(cur.refs -- touched ++ writeData(upserted, version + 1),
-      Some(schema)))
-  }
+    * no data dir and drops out of the new manifest. A MERGE is
+    * [[stageMerge]] then publish: if another commit lands after this
+    * one read its base, it raises [[CommitConflict]] and leaves no
+    * data behind. */
+  def merge(updates: DataFrame, deletes: Option[DataFrame]): Unit =
+    commit(stageMerge(updates, deletes))
 
-  /** The current snapshot of a created table. */
-  private def created: Snap = {
+  /** The current snapshot of a created table, with its version. */
+  private def created: (Int, Snap) = {
     val cur = current
-    require(cur.refs.nonEmpty, s"snapshot table $path not created")
+    require(cur._2.refs.nonEmpty, s"snapshot table $path not created")
     cur
   }
 
@@ -301,12 +275,11 @@ final class SnapshotTable(
     * `data/`, so invisible to readers AND to vacuum), the table's
     * current snapshot is untouched, and the caller audits the
     * would-be table via [[StagedMerge.read]] before deciding. PUBLISH
-    * atomically moves the staged dirs into the data area and commits
-    * a new manifest — but only if no other commit landed since the
-    * stage (first-committer-wins optimistic concurrency, the
-    * Iceberg/Delta commit-conflict rule); ABORT deletes exactly the
-    * staged dirs and nothing else. Either way the staged handle is
-    * single-use.
+    * moves the staged dirs into the data area and commits a new
+    * manifest — but only if no other commit landed since the stage
+    * (first-committer-wins, see the class doc; the loser gets
+    * [[CommitConflict]]); ABORT deletes exactly the staged dirs and
+    * nothing else. Either way the staged handle is single-use.
     *
     * At 100 TB this is how a pipeline runs data-quality checks on the
     * full post-merge view without ever exposing a bad batch: the
@@ -332,14 +305,11 @@ final class SnapshotTable(
     * optimization). */
   def stageMerge(updates: DataFrame, deletes: Option[DataFrame],
       batchKeysHint: Option[DataFrame]): StagedMerge = {
-    val cur = created
+    val (base, cur) = created
     val schema = widened(cur.schema, updates)
-    val base = version
     val (touched, upserted) = upsertPlan(cur, updates, deletes,
       batchKeysHint)
-    val rel = s"staged/s${System.nanoTime()}"
-    val stagedRefs = writeDataAt(upserted, rel)
-    new StagedMerge(base, cur.refs -- touched, rel, stagedRefs, schema)
+    stage(base, cur.refs -- touched, upserted, schema)
   }
 
   /** A staged, unpublished MERGE — see [[stageMerge]]. */
@@ -361,33 +331,47 @@ final class SnapshotTable(
       readSnapDf(Snap(carried ++ stagedRefs, Some(schema)))
     }
 
-    /** Atomically promote the staged write to the current snapshot.
-      * Fails (leaving the staged data intact for a re-stage decision)
-      * if any commit landed after the stage — the audited view would
-      * silently drop that commit's buckets otherwise. */
+    /** Promote the staged write to the current snapshot: claim
+      * `data/c<base + 1>`, move the staged dirs in, commit the
+      * manifest. Raises [[CommitConflict]] if any commit landed after
+      * the stage — the audited view would silently drop that commit's
+      * buckets otherwise. A conflict at the claim leaves the staged
+      * data intact for a re-stage decision. */
     def publish(): Unit = {
       requireLive()
-      require(version == baseVersion,
-        s"concurrent commit detected (staged at v$baseVersion, table " +
-          s"now v$version): abort and re-stage against the new snapshot")
       val c = baseVersion + 1
       val target = Paths.get(path, s"data/c$c")
-      require(!Files.exists(target), s"commit dir c$c already exists")
       Files.createDirectories(target.getParent)
-      Files.move(Paths.get(path, stagedRel), target,
-        StandardCopyOption.ATOMIC_MOVE)
+      if (!CommitLog.claim(target))
+        throw new CommitConflict(s"snapshot table $path: concurrent " +
+          s"commit detected (staged at v$baseVersion, but data/c$c " +
+          "already exists: another commit, or a crashed one's " +
+          "leftover): abort and re-stage against the new snapshot")
+      val from = Paths.get(path, stagedRel)
+      StoreRoot.listNames(from).foreach(n =>
+        Files.move(from.resolve(n), target.resolve(n)))
+      Files.delete(from)
+      consumed = true
       val moved = stagedRefs.map { case (b, d) =>
         b -> d.replaceFirst(java.util.regex.Pattern.quote(stagedRel),
           s"data/c$c")
       }
-      commitManifest(Snap(carried ++ moved, Some(schema)))
-      consumed = true
+      try log.commit(baseVersion, Snap(carried ++ moved, Some(schema)).body)
+      catch {
+        case e: CommitConflict =>
+          StoreRoot.deleteRecursively(target)
+          throw e
+      }
     }
 
     /** Discard the staged write: deletes exactly the staged dirs. */
     def abort(): Unit = {
       requireLive()
-      deleteRecursively(Paths.get(path, stagedRel))
+      discard()
+    }
+
+    private[SnapshotTable] def discard(): Unit = {
+      StoreRoot.deleteRecursively(Paths.get(path, stagedRel))
       consumed = true
     }
   }
@@ -396,18 +380,17 @@ final class SnapshotTable(
     * (the data is byte-identical relationally); retained snapshots
     * keep reading the pre-compaction files until they expire. */
   def compact(): Unit = {
-    val cur = created
+    val (base, cur) = created
     // the manifest-schema read, NOT a plain parquet read: after a
     // widening merge (H23) the live refs mix pre- and post-widening
     // files, and a plain read would infer the narrow schema from an
     // arbitrary footer and silently DROP the widened column's values
     // in the rewrite (caught by WarehouseSpec's post-compaction pin)
-    commitManifest(Snap(writeData(readSnapDf(cur), version + 1),
-      Some(cur.schema)))
+    commit(stage(base, Map.empty, readSnapDf(cur), cur.schema))
   }
 
   /** The current table. */
-  def read(): DataFrame = readSnapDf(current)
+  def read(): DataFrame = readSnapDf(current._2)
 
   /** Time travel: the table as of a RETAINED snapshot — bit-stable
     * under any later merge/compaction while retained (spec-pinned);
@@ -426,11 +409,5 @@ final class SnapshotTable(
     r.values.toSeq.map(d => s"$path/$d")
 
   /** Drop everything (test cleanup). */
-  def drop(): Unit = deleteRecursively(Paths.get(path))
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-    }
+  def drop(): Unit = StoreRoot.deleteRecursively(Paths.get(path))
 }

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Base path for every run-shared store (dedup pair/CC relations, ANN
@@ -36,12 +38,20 @@ object StoreRoot {
     p
   }
 
-  /** Best-effort recursive delete for probe/bench scratch dirs (the
-    * A/B rebuild roots, nonce-named probe tables' storage) — shared
-    * so the harnesses don't each re-grow the walk-and-reverse idiom. */
+  /** The entry names of `dir` (none if it does not exist). */
+  def listNames(dir: Path): Seq[String] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.map(_.getFileName.toString).toSeq
+      finally s.close()
+    }
+
+  /** Best-effort recursive delete, shared by the stores' vacuum and
+    * cleanup and the harnesses' scratch dirs: a failed delete leaves
+    * garbage behind, never a broken snapshot. */
   def deleteRecursively(p: Path): Unit =
     try {
-      import scala.jdk.CollectionConverters._
       if (Files.exists(p)) {
         Files.walk(p).sorted(java.util.Comparator.reverseOrder())
           .iterator().asScala.foreach(Files.deleteIfExists(_))

@@ -42,6 +42,18 @@ object StreamingTwins {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
+  /** Start `w`, run it until its source is drained, stop it. The
+    * query checkpoints into its own temp dir, deleted afterwards:
+    * Spark's default temp checkpoint is left behind when a query
+    * fails, and each start warns about it. */
+  private[graft] def drain[T](
+      w: org.apache.spark.sql.streaming.DataStreamWriter[T]): Unit = {
+    val ckpt = Files.createTempDirectory("graft-ckpt")
+    val q = w.option("checkpointLocation", ckpt.toString).start()
+    try q.processAllAvailable()
+    finally try q.stop() finally graft.sources.StoreRoot.deleteRecursively(ckpt)
+  }
+
   /** Stage the events table as time-ordered parquet batch dirs so the
     * file stream source replays them as separate micro-batches
     * (maxFilesPerTrigger=1; FileStreamSource orders by mtime). The two
@@ -99,10 +111,9 @@ object StreamingTwins {
       "spark.sql.streaming.minBatchesToRetain" -> "2")
     val prior = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
     overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).start()
-    try q.processAllAvailable() finally {
-      q.stop()
+    try drain(df.writeStream.format("memory").queryName(name)
+      .outputMode(mode))
+    finally {
       prior.foreach { case (k, v) =>
         v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
       }
@@ -723,16 +734,14 @@ object StreamingTwins {
       }
       val docSchema = StructType(Seq(
         StructField("doc_id", LongType), StructField("text", StringType)))
-      val q = spark.readStream.schema(docSchema)
+      drain(spark.readStream.schema(docSchema)
         .option("maxFilesPerTrigger", 1).parquet(s"$d/batch_*")
         .writeStream.outputMode("append")
         .foreachBatch {
           (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
            _: Long) =>
             idx.refresh(batch.select("doc_id", "text"))
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        })
       idx
     })
     index.probe(all.filter($"h" === 5).select("doc_id", "text"))
@@ -783,7 +792,7 @@ object StreamingTwins {
     val src = spark.readStream.schema(streamSchema).parquet(s"$dir/batch_*")
     val stateRoot = Files.createTempDirectory("graft_upsert_state").toString
     var epoch = 0 // foreachBatch runs serially on the driver
-    val q = src.filter($"user_id" >= 0)
+    drain(src.filter($"user_id" >= 0)
       .select($"user_id", $"event_id", $"ts", $"event_type", $"value")
       .writeStream.outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -805,9 +814,7 @@ object StreamingTwins {
         merged.write.mode("overwrite")
           .parquet(s"$stateRoot/state_${epoch + 1}")
         epoch += 1
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
     spark.read.parquet(s"$stateRoot/state_$epoch")
       .select($"user_id", $"n_events", $"last.us".as("last_us"),
         $"last.event_type".as("last_event_type"),
@@ -952,7 +959,7 @@ object StreamingTwins {
         (f +: f.listFiles().toSeq).foreach(_.setLastModified(t0 + i * 4000L))
       }
       val sch = StructType(Seq(StructField("cents", LongType)))
-      val q = spark.readStream.schema(sch)
+      drain(spark.readStream.schema(sch)
         .option("maxFilesPerTrigger", 1).parquet(s"$d/batch_*")
         .writeStream.outputMode("append")
         .foreachBatch {
@@ -961,9 +968,7 @@ object StreamingTwins {
             batch.select(expr("cents div 16").as("id"))
               .groupBy(col("id")).agg(count(lit(1)).as("c"))
               .write.mode("append").parquet(s"$d/partials")
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+        })
       d
     })
     val merged = spark.read.parquet(s"$dir/partials")
@@ -1218,16 +1223,14 @@ object StreamingTwins {
     // the created table once) — foreachBatch runs serially
     var runningTotal = Round12Ops.ivmTable(spark, tableDir).read()
       .agg(coalesce(sum(col("n_orders")), lit(0L))).first().getLong(0)
-    val q = src.writeStream.outputMode("append")
+    drain(src.writeStream.outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         // one WAP-gated maintenance commit per micro-batch, through
         // a handle on the micro-batch's session
         runningTotal = Round12Ops.ivmSnapshotStep(
           Round12Ops.ivmTable(batch.sparkSession, tableDir), batch,
           Some(runningTotal))
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
     Round12Ops.ivmTable(spark, tableDir).read()
       .select(col("st").as("o_orderstatus"),
         col("prio").as("o_orderpriority"), col("n_orders"),
@@ -1281,14 +1284,12 @@ object StreamingTwins {
       .option("maxFilesPerTrigger", 1).parquet(s"$stageDir/batch_*")
     var runningTotal = Round12bOps.ivmdTable(spark, tableDir).read()
       .agg(coalesce(sum(col("cnt")), lit(0L))).first().getLong(0)
-    val q = src.writeStream.outputMode("append")
+    drain(src.writeStream.outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         runningTotal = Round12bOps.ivmdSnapshotStep(
           Round12bOps.ivmdTable(batch.sparkSession, tableDir), batch,
           Some(runningTotal))
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
     Round12bOps.ivmdView(Round12bOps.ivmdTable(spark, tableDir).read()
       .select(col("st"), col("cust"), col("cnt")))
   }
