@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryDef
 import graft.Tables
+import graft.plans.Iterate
 
 /** Duplicate-cluster formation: connected components over the
   * near-duplicate pair graph (SURVEY.md §2.D6). Pair generation
@@ -18,8 +19,13 @@ import graft.Tables
   * minimum label in its neighborhood; converges in O(diameter) rounds,
   * each round = one join + one aggregation (all equi-joins on ids —
   * scales linearly per round). Duplicate clusters are tiny (pairs /
-  * small cliques), so 3-5 rounds close almost any real dedup graph;
-  * the loop exits early when labels stop changing.
+  * small cliques), so 3-5 rounds close almost any real dedup graph.
+  * The rounds run on `plans.Iterate`: each round is one eager
+  * checkpoint whose own job also counts the labels it moved, and the
+  * loop exits after the first round that moved none — the exact
+  * fixpoint, found without a separate convergence job. The edge
+  * list's row count (which picks 1 or 2 squarings) is read the same
+  * way from the edge list's checkpoint job.
   */
 object ClusterOps {
 
@@ -33,11 +39,13 @@ object ClusterOps {
     // re-executes — the full upstream. After checkpointing, each round's
     // plan starts from a leaf relation.
     // checkpointed: the squarings below expand edges1 into many plan
-    // leaves (measured 2x slower relying on ReuseExchange instead)
-    val edges1 = pairs.select(col("id1").as("a"), col("id2").as("b"))
-      .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))
-      .distinct()
-      .localCheckpoint(true)
+    // leaves (measured 2x slower relying on ReuseExchange instead);
+    // the same job counts its rows for the squaring decision below
+    val (edges1, observedRows) = Iterate.checkpointCounting(
+      pairs.select(col("id1").as("a"), col("id2").as("b"))
+        .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))
+        .distinct(),
+      lit(true))
     // Square the graph ONCE (edges ∪ 2-hop paths): propagation then moves
     // two hops per round, and combined with pointer-jumping below the
     // common dedup shapes (pairs, stars, short chains) converge at
@@ -57,25 +65,27 @@ object ClusterOps {
     // (round 7, fixed-isolation bench): at sf0.1 (~small edge list) two
     // squarings win (3.8 s vs 4.5 s — the saved round dominates); at
     // ×20 replicas one squaring wins (16.3 s vs 25.0 s — the squared
-    // edge set costs more than the extra round). edges1 is already
-    // checkpointed, so the deciding count() is a near-free cached scan.
-    val nSq = if (edges1.count() <= 50000L) 2 else 1
+    // edge set costs more than the extra round). The row count comes
+    // from edges1's own checkpoint job; only if that observation is
+    // missing does a count() over the checkpoint run.
+    val nEdges1 = observedRows.getOrElse(edges1.count())
+    val nSq = if (nEdges1 <= 50000L) 2 else 1
     val edges = (1 to nSq).foldLeft(edges1)((e, _) =>
       square(e).localCheckpoint(true))
-    // iterative plans MUST truncate lineage each round
-    // (localCheckpoint), or the logical plan grows per iteration and
-    // the analyzer/optimizer blows up long before the data does. In a
-    // fault-tolerant cluster job use checkpoint() on reliable storage.
     // fold the first propagation round into initialization:
     // label₀(v) = min(v, min(N(v))) instead of v — pair/star clusters
     // (the common dedup shape) then converge on the first loop round
-    var labels = edges.groupBy(col("a"))
+    val labels0 = edges.groupBy(col("a"))
       .agg(least(min(col("b")), col("a")).as("label"))
       .select(col("a").as("id"), col("label"))
       .localCheckpoint(true)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+    // the round before's `prop`, released once its checkpoint is done
+    var pinned: Option[DataFrame] = None
+    // each round checkpoints (Iterate) and counts the labels it moved
+    // in that same job; a round that moved none is the fixpoint
+    val run = Iterate.untilUnchanged(labels0, maxIter) { (state, _) =>
+      pinned.foreach(_.unpersist(false))
+      val labels = state.select(col("id"), col("label"))
       // each node adopts min(own label, neighbors' labels)
       val neighborMin = edges
         .join(labels.withColumnRenamed("id", "b").withColumnRenamed("label", "nl"), "b")
@@ -89,36 +99,30 @@ object ClusterOps {
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
           col("label").as("__old"))
         .persist()
+      pinned = Some(prop)
       // pointer-jump: label(v) := label(label(v)). One extra equi-join
       // per round turns O(diameter) convergence into O(log diameter) —
       // a chain of length 2^maxIter still closes, so maxIter=10 covers
       // any graph a dedup pipeline can produce.
-      // carry the previous label through the checkpoint so the
-      // convergence test is a filter on the in-memory relation, not
-      // another join
-      // lazy checkpoint + count: ONE job both materializes the round's
-      // checkpoint and evaluates convergence
-      val next = prop.as("p")
+      // the previous label rides along as __old: the changed count is
+      // a predicate on the round's own output, not another join
+      (prop.as("p")
         .join(prop.select(col("id").as("ptr"), col("label").as("plabel")),
           col("p.label") === col("ptr"), "left")
         .select(col("p.id").as("id"),
           least(col("p.label"), coalesce(col("plabel"), col("p.label"))).as("label"),
-          col("__old"))
-        .localCheckpoint(false)
-      val changed = next.filter(col("label") =!= col("__old")).limit(1).count()
-      prop.unpersist(false) // next is materialized; round cache released
-      labels = next.select(col("id"), col("label"))
-      converged = changed == 0
-      i += 1
+          col("__old")),
+        col("label") =!= col("__old"))
     }
+    pinned.foreach(_.unpersist(false))
     // The DuckDB oracle takes the exact transitive closure; returning a
     // partially-propagated labeling would diverge from it silently.
-    if (!converged)
+    if (!run.converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — " +
           "with pointer-jumping this needs component diameter > 2^maxIter; " +
           "raise maxIter or inspect the pair graph")
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
+    run.state.select(col("id").as("doc_id"), col("label").as("cluster_id"))
   }
 
   /** dedup_clusters: MinHash near-dup pairs → duplicate clusters with

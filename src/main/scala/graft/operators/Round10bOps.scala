@@ -7,25 +7,27 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.QueryDef
 import graft.Tables
+import graft.plans.Iterate
 
 /** Round-10 second widening (SURVEY.md §2): the graph-distance and
   * community layers over the dedup pair graph, plus two classic
   * mining/learning primitives the relational family still lacked —
   * association rules (a-priori) and exact decision-stump split
-  * search. All four are fixed-round / closed-form deterministic and
-  * DuckDB-oracled (the D-family oracles replay the shared MinHash
-  * pair CTEs; D28's BFS is a bounded recursive CTE, D29's rounds are
-  * unrolled).
+  * search. All four are deterministic and DuckDB-oracled (the
+  * D-family oracles replay the shared MinHash pair CTEs; D28's BFS is
+  * a bounded recursive CTE, D29's and D31's rounds are unrolled).
   *
-  * Scale discipline (100 TB): both graph ops run over the run-shared
-  * LSH pair store (duplicate-pair-sized, never corpus-sized) with
-  * per-round localCheckpoint lineage truncation (the D18/E16
-  * discipline); the rule miner prunes to frequent items BEFORE
-  * pairing (the a-priori downward-closure step — the pair shuffle is
-  * then bounded by frequent-item baskets, and within-basket fanout
-  * by items-per-order); the split search aggregates the fact table
-  * to |distinct thresholds| rows FIRST, so its unpartitioned
-  * cumulative window orders ~50 rows, not 6×10⁹.
+  * Scale discipline (100 TB): the graph ops run over the run-shared
+  * LSH pair store (duplicate-pair-sized, never corpus-sized) on
+  * `plans.Iterate`: one eager localCheckpoint per round truncates
+  * lineage (the D18/E16 discipline), and the fixpoint loops (D28,
+  * D31) stop after the first round that changed nothing, counted
+  * inside that round's own checkpoint job; the rule miner prunes to
+  * frequent items BEFORE pairing (the a-priori downward-closure
+  * step — the pair shuffle is then bounded by frequent-item baskets,
+  * and within-basket fanout by items-per-order); the split search
+  * aggregates the fact table to |distinct thresholds| rows FIRST, so
+  * its unpartitioned cumulative window orders ~50 rows, not 6×10⁹.
   */
 object Round10bOps {
 
@@ -60,10 +62,13 @@ object Round10bOps {
     * source, capped at 4 (beyond 4 hops of near-duplication the
     * signal is noise); unreached nodes are absent.
     *
-    * Determinism: min-hop BFS is iteration-order-free; rounds are
-    * fixed (no convergence test). The oracle is a bounded RECURSIVE
-    * CTE over the same shared pair relation — hash equality proves
-    * the whole traversal, frontier by frontier.
+    * Determinism: min-hop BFS is iteration-order-free. Round r
+    * reaches exactly the nodes at distance r; once a round reaches
+    * none, the next frontier is empty and every later round is a
+    * no-op, so the loop stops there (`Iterate.untilUnchanged`) with
+    * the same answer as all 4 rounds. The oracle is a bounded
+    * RECURSIVE CTE over the same shared pair relation — hash equality
+    * proves the whole traversal, frontier by frontier.
     *
     * Scale: every round joins the current frontier (≤ graph nodes)
     * against the checkpointed edge list on a single BIGINT key —
@@ -77,21 +82,20 @@ object Round10bOps {
     * seed set — the spec hook (`Round10bSpec` plants a path and an
     * unseeded component). */
   private[graft] def bfsPipeline(edges: DataFrame, maxHops: Int): DataFrame = {
-    var dist = edges.filter(col("a") % 13 === 0)
+    val seeds = edges.filter(col("a") % 13 === 0)
       .select(col("a").as("doc_id")).distinct()
       .withColumn("dist", lit(0))
-    (1 to maxHops).foreach { r =>
+    Iterate.untilUnchanged(seeds, maxHops) { (dist, r) =>
       // shuffle_hash: the frontier is node-sized and GROWS with the
       // graph — letting AQE driver-broadcast it OOMs at ×50 replicas
       // (the D25 two-star lesson applied here)
       val next = dist.filter(col("dist") === r - 1).hint("shuffle_hash")
         .join(edges, col("doc_id") === col("a"))
         .select(col("b").as("doc_id"), lit(r).as("dist"))
-      dist = dist.unionByName(next)
-        .groupBy("doc_id").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
-    }
-    dist.select(col("doc_id"), col("dist"))
+      (dist.unionByName(next)
+        .groupBy("doc_id").agg(min("dist").as("dist")),
+        col("dist") === r)
+    }.state.select(col("doc_id"), col("dist"))
   }
 
   val graphShortestPathsSql: String =
@@ -118,10 +122,14 @@ object Round10bOps {
     * cheapest path is NOT the fewest-hop path — the case BFS gets
     * wrong by construction.
     *
-    * 4 Bellman-Ford relaxation rounds (synchronous, order-free); the
-    * D28 plan discipline: node-sized dist relation shuffle_hash-
-    * joined against the checkpointed edge list per round, min-agg,
-    * localCheckpoint; oracle-unrolled rounds. */
+    * Up to 4 Bellman-Ford relaxation rounds (synchronous,
+    * order-free); the D28 plan discipline: node-sized dist relation
+    * shuffle_hash-joined against the checkpointed edge list per
+    * round, min-agg, localCheckpoint. The min-agg carries each node's
+    * previous distance, and the loop stops after a round in which no
+    * distance fell and no node appeared: a round is a function of the
+    * distances alone, so the rest would change nothing and the result
+    * equals the oracle's 4 unrolled rounds. */
   def graphWeightedPaths(spark: SparkSession, sfDir: String): DataFrame = {
     val pairs = DedupOps.dedupMinhashLsh(spark, sfDir)
     val w = (lit(128) - round(col("est_jaccard") * 128)).cast("long")
@@ -139,18 +147,21 @@ object Round10bOps {
     * path beating an expensive direct edge). */
   private[graft] def weightedPathsPipeline(edges: DataFrame,
       rounds: Int): DataFrame = {
-    var dist = edges.filter(col("a") % 13 === 0)
+    val seeds = edges.filter(col("a") % 13 === 0)
       .select(col("a").as("doc_id")).distinct()
       .withColumn("dist", lit(0L))
-    (1 to rounds).foreach { _ =>
+    Iterate.untilUnchanged(seeds, rounds) { (dist, _) =>
       val relax = dist.hint("shuffle_hash")
         .join(edges, col("doc_id") === col("a"))
-        .select(col("b").as("doc_id"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionByName(relax)
-        .groupBy("doc_id").agg(min("dist").as("dist"))
-        .localCheckpoint(true)
-    }
-    dist.select(col("doc_id"), col("dist"))
+        .select(col("b").as("doc_id"), (col("dist") + col("w")).as("dist"),
+          lit(null).cast("long").as("old"))
+      // the carried rows bring their value as `old`: a node changed
+      // iff it is new (no carried row) or its distance fell
+      (dist.select(col("doc_id"), col("dist"), col("dist").as("old"))
+        .unionByName(relax)
+        .groupBy("doc_id").agg(min("dist").as("dist"), min("old").as("old")),
+        col("old").isNull || col("dist") < col("old"))
+    }.state.select(col("doc_id"), col("dist"))
   }
 
   val graphWeightedPathsSql: String = {
@@ -278,10 +289,15 @@ object Round10bOps {
     * label, ties broken by smallest label — a total order, so the
     * rounds are deterministic (asynchronous LPA famously isn't).
     *
+    * The vote is one `mode(label, deterministic = true)` per node:
+    * the most frequent neighbour label, ties to the smallest — the
+    * same rule as the oracle's count + row_number.
+    *
     * Scale: per round one equi-join of the label relation against
-    * the checkpointed edges + one (node, label) count-agg + one
-    * per-node argmax window partitioned by node — all
-    * duplicate-pair-sized; fixed rounds, checkpoint-per-round. */
+    * the checkpointed edges + one per-node mode aggregate — all
+    * duplicate-pair-sized; checkpoint-per-round. The 3 rounds stay
+    * fixed, with no early exit: synchronous LPA flips back and forth
+    * on 2-node components, so "nothing changed" need never happen. */
   def graphLabelProp(spark: SparkSession, sfDir: String): DataFrame =
     labelPropPipeline(dupEdges(spark, sfDir), rounds = 3)
 
@@ -290,22 +306,19 @@ object Round10bOps {
     * community split CC cannot produce). */
   private[graft] def labelPropPipeline(edges: DataFrame,
       rounds: Int): DataFrame = {
-    var labels = edges.select(col("a").as("doc_id")).distinct()
+    val init = edges.select(col("a").as("doc_id")).distinct()
       .withColumn("label", col("doc_id"))
-    val argmax = Window.partitionBy(col("a"))
-      .orderBy(col("c").desc, col("label"))
-    (1 to rounds).foreach { _ =>
-      // shuffle_hash on the node-sized label relation (see bfsPipeline)
-      labels = edges.join(labels.hint("shuffle_hash"),
-          edges("b") === labels("doc_id"))
-        .groupBy(col("a"), col("label")).agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(argmax))
-        .filter(col("rn") === 1)
-        .select(col("a").as("doc_id"), col("label"))
-        .localCheckpoint(true)
-    }
-    labels
+    Iterate(init, rounds)((labels, _) => labelVote(edges, labels))
   }
+
+  /** One synchronous LPA round: each node `a` takes the most frequent
+    * label among its neighbours `b`, ties to the smallest — the spec
+    * hook for the tie rule on its own. */
+  private[graft] def labelVote(edges: DataFrame, labels: DataFrame): DataFrame =
+    // shuffle_hash on the node-sized label relation (see bfsPipeline)
+    edges.join(labels.hint("shuffle_hash"), edges("b") === labels("doc_id"))
+      .groupBy(col("a").as("doc_id"))
+      .agg(mode(col("label"), deterministic = true).as("label"))
 
   val graphLabelPropSql: String = {
     val rounds = (1 to 3).map { r =>

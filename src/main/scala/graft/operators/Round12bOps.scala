@@ -346,20 +346,26 @@ object Round12bOps {
     * are a sufficient summary of every old-old candidate edge. The
     * increment scores ONLY candidate pairs with a new endpoint
     * (batch buckets ⋈ corpus buckets — O(batch·bucket), never the
-    * corpus self-join), re-ranks ONLY the srcs that gained a
-    * candidate, and passes every other standing row through
-    * untouched. The DuckDB oracle is E19's full-rebuild SQL over the
-    * whole corpus: hash equality proves incremental ≡ rebuild, the
-    * A33 pattern lifted to an index structure.
+    * corpus self-join), then ranks standing ∪ new edges with ONE
+    * `row_number` window per src over (sim desc, dst). That window IS
+    * top3(top3(A) ∪ B): a src that gained no candidate sees only its
+    * own ≤3 standing rows, which were ranked by the same order, so it
+    * gets back exactly its stored ranks. The DuckDB oracle is E19's
+    * full-rebuild SQL over the whole corpus: hash equality proves
+    * incremental ≡ rebuild, the A33 pattern lifted to an index
+    * structure.
     *
     * Scale: the standing graph and the old corpus's bucket table are
-    * SERVED FROM THE RUN-SHARED `AnnIndexStore` (round-12 judge item
-    * #1: the keyed `knngpre_` entry — exactly the two relations a
-    * standing vector index stores between ingests, the E11/E15
-    * pattern), so this plan's maintenance path proper touches two
-    * store reads, the batch's buckets, one batch×bucket join, and
-    * the affected srcs' ≤3-row standing lists — never a graph
-    * rebuild. */
+    * SERVED FROM THE RUN-SHARED `AnnIndexStore` (the keyed `knngpre_`
+    * entry — exactly the two relations a standing vector index stores
+    * between ingests, the E11/E15 pattern), so the maintenance path
+    * touches two store reads, the batch's buckets and one
+    * batch×bucket join — never a graph rebuild. At 100 TB the standing
+    * graph (3 rows per vector) is shuffled once by src into the
+    * window. The earlier plan shuffled it in full too, through a
+    * left-anti join and a semi-join against the affected srcs; the
+    * window's sort replaces those two hash joins and the affected-src
+    * `distinct`. */
   def knnGraphIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.gf
@@ -379,11 +385,11 @@ object Round12bOps {
     // the STANDING graph + bucket table over the old corpus — two
     // keyed store reads (E19's build restricted to the old vectors,
     // built once per run into the AnnIndexStore)
-    val (standing0, oldB) = AnnOps.knnGraphPre(spark, sfDir)
-    val standing = standing0.persist()
+    val (standing, oldB) = AnnOps.knnGraphPre(spark, sfDir)
 
     // the MAINTENANCE path: batch buckets ⋈ (standing ∪ batch)
     // buckets → directed candidate edges with a new endpoint
+    // (persisted: the pair join reads newB on both sides)
     val newB = AnnOps.signBucketsQ(emb.filter(newPred), "vec_id", 4, 8)
       .persist()
     val pairs = newB
@@ -398,16 +404,14 @@ object Round12bOps {
       pairs.select(col("n").as("src"), col("x").as("dst"))
         .unionByName(pairs.filter(col("x") % 10 =!= 4)
           .select(col("x").as("src"), col("n").as("dst"))))
-      .persist()
 
-    val affected = newEdges.select(col("src")).distinct()
-    val untouched = standing.join(affected, Seq("src"), "left_anti")
-    val reranked = standing.join(affected, Seq("src"))
-      .select(col("src"), col("dst"), col("sim"))
+    // top3(top3(A) ∪ B) per src in ONE window: a src with no new edge
+    // gets back exactly its stored ranks (the standing graph was
+    // ranked by this same order)
+    standing.select(col("src"), col("dst"), col("sim"))
       .unionByName(newEdges)
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
       .select(col("src"), col("rank"), col("dst"), col("sim"))
-    untouched.unionByName(reranked)
   }
 
   /** The oracle is E19's — the full rebuild over the whole corpus. */

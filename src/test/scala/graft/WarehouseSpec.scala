@@ -588,34 +588,6 @@ class WarehouseSpec extends SparkSuite {
     } finally t.drop()
   }
 
-  /** `body`'s result and the Spark jobs it started on this thread:
-    * the jobs run under a fresh job group, then a fence job in a second
-    * group marks the end of their events on the listener bus. */
-  private def withJobCount[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"graft_jobs_${System.nanoTime()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .map(p => String.valueOf(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-fence", "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.contains(s"$group-fence") && System.nanoTime() < deadline)
-        Thread.sleep(5)
-      assert(seen.contains(s"$group-fence"), "fence job never reported")
-      (out, seen.asScala.count(_ == group))
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("snapshot table manifest schema: reads after create, merge, staged publish and compaction start no job before their action, their schema equals a merged-footer read, and every commit writes one file per bucket") {
     import spark.implicits._
     import graft.sources.SnapshotTable
