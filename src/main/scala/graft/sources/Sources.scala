@@ -1,8 +1,11 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Source/sink layer (SURVEY.md §2.A12-A14).
   *
@@ -59,11 +62,35 @@ object Sources {
 
   /** JSON state read — the optimizations.json analog. Set
     * `multiLine=true` for the reference's pretty-printed
-    * array-of-objects layout; default JSONL for our own writes. */
-  def readJsonState(spark: SparkSession, path: String, multiLine: Boolean = false): DataFrame =
-    spark.read.option("multiLine", multiLine.toString).json(path)
+    * array-of-objects layout; default JSONL for our own writes. A state
+    * [[writeJsonState]] wrote reads back with its stored schema: its
+    * own column order and types, and no inference job. Any other
+    * layout is inferred. */
+  def readJsonState(spark: SparkSession, path: String, multiLine: Boolean = false): DataFrame = {
+    val reader = spark.read.option("multiLine", multiLine.toString)
+    storedSchema(spark, path).fold(reader)(reader.schema).json(path)
+  }
 
-  /** JSON state write (single file, small state). */
-  def writeJsonState(df: DataFrame, path: String): Unit =
+  /** JSON state write (single file, small state), with the frame's
+    * schema in `_schema.json` beside the part file; Spark's readers
+    * skip `_`-prefixed files. */
+  def writeJsonState(df: DataFrame, path: String): Unit = {
     df.coalesce(1).write.mode("overwrite").json(path)
+    val p = new Path(path, SchemaFile)
+    val out = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(df.schema.json.getBytes(UTF_8)) finally out.close()
+  }
+
+  private val SchemaFile = "_schema.json"
+
+  private def storedSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val p = new Path(path, SchemaFile)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(DataType.fromJson(new String(in.readAllBytes(), UTF_8)).asInstanceOf[StructType])
+      finally in.close()
+    }
+  }
 }

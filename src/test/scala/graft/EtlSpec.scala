@@ -110,6 +110,17 @@ class EtlSpec extends SparkSuite {
     assert(back.columns.sorted.toSeq == Seq("hotel_cd", "lst_optimization"))
   }
 
+  test("json state written by graft reads back with its own schema and no inference job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_json3").toFile.getAbsolutePath + "/state"
+    val state = Seq(("HOTELA", 12, 99.5), ("HOTELB", 3, 120.0)).toDF("hotel_cd", "n_rooms", "avg_rate")
+    Sources.writeJsonState(state, dir)
+    val (back, jobs) = withJobCount(Sources.readJsonState(spark, dir))
+    assert(jobs == 0)
+    assert(back.schema.map(f => f.name -> f.dataType) == state.schema.map(f => f.name -> f.dataType))
+    assert(back.collect().toSet == state.collect().toSet)
+  }
+
   test("json state reads the reference's pretty-printed array layout") {
     val f = java.nio.file.Files.createTempDirectory("graft_json2").resolve("optimizations.json")
     java.nio.file.Files.writeString(f,

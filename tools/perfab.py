@@ -7,7 +7,9 @@
 
 Run from the repository root. The base commit is exported (`git archive`)
 into a temporary directory, removed at the end; the change is the working
-tree. Each side's harness is built once before the first pair. There is
+tree. Each side's harness is built once, then runs every workload once
+untimed (a cold host's first run can read far off its median, and one
+such run can flip a short A/B), before the first pair. There is
 one pair per seed: pair i runs `perfbench/run.py` for every workload with
 the i-th seed and BENCHMARK.json's `run_seconds` on both sides, base first
 on even pairs and change first on odd ones, so a slow stretch of the host
@@ -118,6 +120,9 @@ def main():
         sides = {"base": export(a.base, os.path.join(tmp, "base")), "change": ROOT}
         for checkout in sides.values():
             build(checkout)
+        for checkout in sides.values():
+            for w in workloads:
+                bench(checkout, w, seeds(a.seeds)[0], seconds)
         runs = []
         for i, seed in enumerate(seeds(a.seeds)):
             order = ("base", "change") if i % 2 == 0 else ("change", "base")
